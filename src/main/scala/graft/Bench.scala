@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -13,33 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-code cache defaults to 100 entries (static conf); a
-      // 90-query suite compiles far more generated classes than that, so
-      // late-alphabet queries evict+recompile their codegen on EVERY pass
-      // — q88's large projection paid ~6 s/pass of janino time in one
-      // 89-query run (12.0 s min-of-2 vs 0.8 s standalone). Size the cache
-      // to the suite: the rule is "comfortably ABOVE the suite's generated-
-      // class count" — 8000 was set for a 102-query suite and the r10
-      // driver run showed the eviction signature again at 129 queries
-      // (q13 4.61 s in-suite vs 0.47 s standalone).
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      // Let file scans split down to ~totalBytes/defaultParallelism:
-      // maxSplitBytes = min(maxPartitionBytes, max(openCost, bytes/cores)),
-      // so the default 4 MiB openCost floors every sub-128-MiB table at ONE
-      // split and stage 1 of each query runs on one core. 8 KiB keeps the
-      // formula's self-scaling term in charge; combined with the
-      // SplitLayout row-group normalization the small-SF scans run at full
-      // width, the same shape a production multi-file input gets for free.
-      .config("spark.sql.files.openCostInBytes", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm the JVM/codegen/parquet-reader paths so the first measured query
     // doesn't absorb session startup.
     def sentinelOnce(): Double = {
@@ -83,15 +55,11 @@ object Bench {
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
     // Optional comma-separated subset (SPARK_GRAFT_BENCH_ONLY=q66_...,q67_...)
     // for standalone re-probes of a single query's regression.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // A misspelled name silently shrinking the set is exactly the class of
-    // silently-wrong bench output that burned rounds 1 and 4 — fail loudly.
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    // silently-wrong bench output that burned rounds 1 and 4 — the
+    // selector fails loudly on it.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(SparkEntry.selectQueries(_, "SPARK_GRAFT_BENCH_ONLY").toSet)
     // Redundant-twin trim: queries whose FULL cost is already measured by a
     // sibling in the suite are skipped from the default loop (they stay in
     // Verify — correctness coverage is untouched). The suite is 130+ queries
@@ -244,7 +212,7 @@ object Bench {
          if (System.nanoTime() - benchStart) / 1e9 < budgetSec * 1.2) {
       val again = runOnce(name)
       probeShared = None; sharedRddIds = Set.empty
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(blocking = true))
+      GraftSession.reapDetached(spark)
       if (again < firstPass(name)) firstPass(name) = again
     }
     // Still >2x the era-scaled record after the spaced re-probe = a real

@@ -95,6 +95,23 @@ object SparkEntry {
 
   // ---- query catalog ----------------------------------------------------
 
+  /** The query names in `spec`, a comma-separated list, in order and
+    * without repeats. Every tool that takes query names goes through here:
+    * a misspelled name must fail the run, not silently shrink the set, so
+    * an empty list or any unknown name throws with the full known list.
+    * `source` names the argument or env var in the error. */
+  def selectQueries(spec: String, source: String): Seq[String] = {
+    val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val known = queries.keySet
+    val unknown = names.filterNot(known)
+    val problem =
+      if (names.isEmpty) "no query names given"
+      else s"unknown queries ${unknown.mkString(", ")}"
+    require(names.nonEmpty && unknown.isEmpty,
+      s"$source: $problem; known queries: ${known.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A3-A8/G-agg: full-scan hash aggregate with decimal-exact sums (TPC-H Q1 shape).
@@ -1171,7 +1188,8 @@ object SparkEntry {
     // SemDeDup-shaped semantic dedup: drop any vector with an earlier
     // same-LSH-bucket neighbor above cosine 0.35 (keep-first), MEAN-
     // CENTERED — buckets and cosines both run on v - mu (the measured
-    // concentration fix; ScaleProbe `semplanes` CONCENTRATED leg). The
+    // concentration fix; BASELINE.md "Round-19: mean-centering closes the
+    // LSH concentration hole"). The
     // deterministic hyperplane buckets (q37's) plus the 6-dp-rounded mean
     // (fitMeanVector's cross-engine constant) keep the oracle exact.
     "q94_sem_dedup" -> ((s, dir) => {
@@ -3270,9 +3288,10 @@ object SparkEntry {
 
     // q94's OR-construction sibling: two independent 6-plane bands,
     // candidate = same bucket in EITHER band — the recall-recovery lever
-    // ScaleProbe `semplanes` motivates (one band's pair recall r becomes
-    // 1-(1-r)^2). Deterministic plane arithmetic keeps the oracle exact:
-    // DuckDB rebuilds both bands and ORs the join condition.
+    // BASELINE.md "Round-18 probe: the nPlanes lever" motivates (one
+    // band's pair recall r becomes 1-(1-r)^2). Deterministic plane
+    // arithmetic keeps the oracle exact: DuckDB rebuilds both bands and
+    // ORs the join condition.
     "q219_sem_dedup_banded" -> ((s, dir) => {
       Similarity.semanticDedupBanded(Tables.embeddings(s, dir),
           threshold = 0.35, nPlanes = 6, bands = 2, center = true)
@@ -4084,20 +4103,33 @@ object SparkEntry {
     when(col("doc_id") % 7 === 0, lit("#section-2")).otherwise(lit("")))
 
   /** Build-or-load the persisted IVF-PQ index for `dir` (q106). Cached
-    * under the JVM temp dir, keyed by the data dir path, so Verify and
-    * Bench (separate JVMs) share one fit per scale factor; the testdata
-    * snapshot is immutable within a round, which is exactly the
+    * under the JVM temp dir ([[ivfPqIndexCache]]), so Verify and Bench
+    * (separate JVMs) share one fit per snapshot — exactly the
     * index-per-corpus-snapshot contract [[Similarity.saveIvfPqIndex]]
     * documents. Same fit parameters as q100 (8 cells, 8x16 residual PQ,
     * 3 Lloyd iterations). */
   private def prefitIvfPqIndex(s: SparkSession, dir: String): Similarity.IvfPqIndex = {
-    val cache = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivfpq_idx_${Integer.toHexString(dir.hashCode)}").getPath
+    val (nCells, m, ksub, iterations) = (8, 8, 16, 3)
+    val cache = ivfPqIndexCache(dir, nCells, m, ksub, iterations)
     if (new java.io.File(s"$cache/encoded/_SUCCESS").exists())
       Similarity.loadIvfPqIndex(s, cache)
     else
       Similarity.buildIvfPqIndex(Tables.embeddings(s, dir), cache,
-        nCells = 8, m = 8, ksub = 16, iterations = 3)
+        nCells = nCells, m = m, ksub = ksub, iterations = iterations)
+  }
+
+  /** Where [[prefitIvfPqIndex]] caches the index fit on `dir`'s embeddings:
+    * keyed on the dir, the embeddings file's length and mtime, and every
+    * fit parameter, so neither a regenerated snapshot nor a changed fit
+    * can serve a stale index (q106 is rows-only — the oracle would not
+    * catch one). */
+  private[graft] def ivfPqIndexCache(dir: String, nCells: Int, m: Int, ksub: Int,
+                                     iterations: Int): String = {
+    val src = new java.io.File(s"$dir/embeddings.parquet")
+    val key = s"$dir|${src.length()}|${src.lastModified()}|" +
+      s"nCells=$nCells|m=$m|ksub=$ksub|iterations=$iterations"
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_ivfpq_idx_${graft.sources.SplitLayout.digest(key)}").getPath
   }
 
   /** Deterministic line synthesis shared by q88/q91: the single-line

@@ -1,33 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // size the generated-code cache to the suite (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .config("spark.sql.files.openCostInBytes", "8192") // see Bench: scan-split self-scaling
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset (SPARK_GRAFT_VERIFY_ONLY=q114_...)
     // for fast local iteration on new queries — same contract as Bench's
     // SPARK_GRAFT_BENCH_ONLY, including the fail-loudly-on-typo guard.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+      .map(SparkEntry.selectQueries(_, "SPARK_GRAFT_VERIFY_ONLY").toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -36,9 +20,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // reap detached (localCheckpoint) blocks between queries — same
-      // storage-accumulation guard as Bench's (see its comment)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // same storage-accumulation guard as Bench's (see its comment)
+      GraftSession.reapDetached(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

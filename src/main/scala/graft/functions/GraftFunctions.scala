@@ -273,9 +273,15 @@ object GraftFunctions {
       ExactPercentiles(asDouble(es(0)), ps)
     }))
 
-  /** Register all graft expressions for SQL usage. Idempotent. */
+  /** Register all graft expressions for SQL usage. Idempotent and quiet:
+    * a name whose registry entry already IS graft's builder (the same
+    * `sqlBuilders` instance) is skipped, so the operators that call this on
+    * every invocation neither touch the registry nor log Spark's "replaced
+    * a previously registered function" WARN. A user function registered
+    * under one of graft's names is replaced, as on the first call. */
   def registerAll(spark: SparkSession): Unit =
     sqlBuilders.foreach { case (name, b) =>
-      GraftSqlBridge.registerFunction(spark, name, b)
+      if (!GraftSqlBridge.registeredFunction(spark, name).exists(_ eq b))
+        GraftSqlBridge.registerFunction(spark, name, b)
     }
 }

@@ -255,26 +255,14 @@ object Similarity {
     * pass, not two. The price is materializing (id, vector, cell_id) to
     * executor storage for the query's lifetime — cheaper than a second
     * ncentroids x dim flops pass per row, and exactly the frame the join
-    * must shuffle anyway. A caller who knows the cells are balanced skips
-    * fit AND detach with `codesPerSalt = Long.MaxValue`. */
+    * must shuffle anyway (BASELINE.md "Round-18 revision: rawdetach A/B
+    * re-measured cache-free": 1.53x at 256 cells / 1M rows, a wash at 32
+    * cells). A caller who knows the cells are balanced skips fit AND
+    * detach with `codesPerSalt = Long.MaxValue`. */
   def ivfTopK(corpus: DataFrame, centroids: DataFrame, probes: DataFrame, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",
               nprobe: Int = 1, broadcastProbes: Boolean = true,
-              codesPerSalt: Long = 8192L, maxSalt: Int = 64): DataFrame =
-    ivfTopKImpl(corpus, centroids, probes, k, idCol, vecCol, nprobe,
-      broadcastProbes, codesPerSalt, maxSalt, detachSalted = true)
-
-  /** [[ivfTopK]] with the salted path's detach togglable — the A/B hook
-    * ScaleProbe's `rawdetach` section uses to measure the one-assignment-
-    * pass claim (detachSalted = false re-runs the assignment kernel in
-    * both the salt fit and the join, the pre-r16 shape). Not part of the
-    * public surface; output is detach-invariant (pinned by the probe). */
-  private[graft] def ivfTopKImpl(corpus: DataFrame, centroids: DataFrame,
-              probes: DataFrame, k: Int,
-              idCol: String, vecCol: String,
-              nprobe: Int, broadcastProbes: Boolean,
-              codesPerSalt: Long, maxSalt: Int,
-              detachSalted: Boolean): DataFrame = {
+              codesPerSalt: Long = 8192L, maxSalt: Int = 64): DataFrame = {
     val cells = assignCells(corpus, centroids, idCol, vecCol)
     val p = assignCellsMulti(probes, centroids, nprobe, idCol, vecCol)
       .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"), col("cell_id"))
@@ -284,7 +272,7 @@ object Similarity {
     // assignment kernel over the corpus (see COST NOTE above); the
     // broadcast and escape-hatch paths run the kernel exactly once already
     val c =
-      if (!broadcastProbes && codesPerSalt != Long.MaxValue && detachSalted)
+      if (!broadcastProbes && codesPerSalt != Long.MaxValue)
         Relational.detach(c0)
       else c0
     val scored =
@@ -596,10 +584,11 @@ object Similarity {
     * SIZING `threshold` — it lives in RECONSTRUCTED space, so it must
     * sit BELOW the index's measured self-recall cosine
     * (cos(v, recon(v)) for exact re-crawls), which depends on the
-    * codebook budget AND the corpus's intrinsic structure (ScaleProbe
-    * `scrubappend`, 200k x 64d, m = 8): a structureless corpus at
-    * ksub = 16 reconstructs at mean cosine 0.52 — a τ = 0.8 scrub then
-    * silently misses ~everything — while ksub = 256 restores τ = 0.7 to
+    * codebook budget AND the corpus's intrinsic structure (BASELINE.md
+    * "Round-20: the cross-wave scrub/append loop priced", 200k x 64d,
+    * m = 8): a structureless corpus at ksub = 16 reconstructs at mean
+    * cosine 0.52 — a τ = 0.8 scrub then silently misses ~everything —
+    * while ksub = 256 restores τ = 0.7 to
     * 5000/5000 exact-re-crawl recall; a 12-dim-manifold corpus (the
     * real embedding shape) reaches 4995/5000 at τ = 0.8 with ksub = 64.
     * Measure the ladder on a held-out sample before choosing τ. New-vs-new duplicates are NOT handled here — run
@@ -1039,7 +1028,8 @@ object Similarity {
     * size — `nPlanes` is the lever (each plane halves expected bucket
     * population), and AQE's skew split handles hot buckets.
     *
-    * CONCENTRATION (measured, ScaleProbe `semplanes`): a corpus clustered
+    * CONCENTRATION (measured, BASELINE.md "Round-19: mean-centering
+    * closes the LSH concentration hole"): a corpus clustered
     * around a shared mean direction — the usual shape of real
     * sentence-embedding spaces — pins the sign of every plane that
     * weights the shared dims, collapsing spread regardless of the plane
@@ -1088,7 +1078,8 @@ object Similarity {
     * recall r to 1 - (1-r)^b for b times the bucket-join cost. The same
     * AND-OR trade as [[Dedup]]'s 4x4 MinHash banding, in embedding space.
     *
-    * Measured recall/cost ladder (ScaleProbe `semplanes`, 200k x 64d in
+    * Measured recall/cost ladder (BASELINE.md "Round-18 probe: the
+    * nPlanes lever, quantified", 200k x 64d in
     * 40k planted 5-dup clusters, within-cluster cosine ~0.9996; "pred" is
     * the 1-(1-r)^b rule from the single-band rows — it extrapolates):
     * {{{

@@ -43,7 +43,7 @@ object ObjectStore {
     *  - `fs.s3a.block.size=128M` — the split size the FileScan planner
     *    sees; aligns S3 range-GETs with `files.maxPartitionBytes`.
     *
-    * Returned as a map so callers can apply it to a SparkSession builder
+    * Returned as a map so callers can apply it to a session builder
     * (`spark.hadoop.` prefix) or an existing hadoopConfiguration. */
   def s3aProductionConf: Map[String, String] = Map(
     "fs.s3a.committer.name" -> "magic",

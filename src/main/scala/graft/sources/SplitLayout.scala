@@ -26,9 +26,10 @@ import org.apache.spark.sql.SparkSession
   * order — a single-task sequential write cut by `maxRecordsPerFile`,
   * so the cache content is deterministic). The cache key includes the
   * source's length and mtime, so a regenerated snapshot invalidates
-  * automatically. Correctness is externally audited: the DuckDB oracle
-  * reads the ORIGINAL files, so any row lost or duplicated by the
-  * rewrite fails every hash check.
+  * automatically, and the file count, so a run at one core count never
+  * fixes the scan width of a later run at another. Correctness is
+  * externally audited: the DuckDB oracle reads the ORIGINAL files, so any
+  * row lost or duplicated by the rewrite fails every hash check.
   *
   * Disable with SPARK_GRAFT_SPLIT_CACHE=0.
   */
@@ -44,19 +45,29 @@ object SplitLayout {
     // only monolithic single-file sources qualify; directories are already
     // multi-file (or someone else's layout decision)
     if (!src.isFile || src.length() < MinBytes) return path
-    val key = s"$path|${src.length()}|${src.lastModified()}"
-    val digest = MessageDigest.getInstance("SHA-1").digest(key.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val cache = new File(System.getProperty("java.io.tmpdir"), s"graft_split_$digest")
-    if (!new File(cache, "_SUCCESS").exists()) rewrite(spark, path, cache)
+    val files = spark.sparkContext.defaultParallelism.max(2)
+    val cache = cacheDir(path, files)
+    if (!new File(cache, "_SUCCESS").exists()) rewrite(spark, path, files, cache)
     cache.getPath
   }
 
-  private def rewrite(spark: SparkSession, path: String, cache: File): Unit = synchronized {
+  /** Where the `files`-way rewrite of `path` is cached. */
+  private[graft] def cacheDir(path: String, files: Int): File = {
+    val src = new File(path)
+    new File(System.getProperty("java.io.tmpdir"),
+      s"graft_split_${digest(s"$path|${src.length()}|${src.lastModified()}|$files")}")
+  }
+
+  /** First 8 bytes of the key's SHA-1, hex — a `/tmp` cache dir suffix. */
+  private[graft] def digest(key: String): String =
+    MessageDigest.getInstance("SHA-1").digest(key.getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
+  private def rewrite(spark: SparkSession, path: String, files: Int,
+                      cache: File): Unit = synchronized {
     if (new File(cache, "_SUCCESS").exists()) return // lost the race, fine
     val raw = spark.read.parquet(path)
     val n = raw.count() // metadata-only: no filters, no projection
-    val files = spark.sparkContext.defaultParallelism.max(2)
     val perFile = Math.max(1L, (n + files - 1) / files)
     val tmp = new File(cache.getParent, s"${cache.getName}.tmp.${ProcessHandle.current().pid()}")
     raw.write.mode("overwrite")

@@ -300,7 +300,8 @@ object EventStreams {
     *
     * PQ-CODES-IN-STATE (`pqBooks`): at 100 TB the binding resource of
     * this rung is ListState bytes (measured ~345–440 B/doc for raw 48-dim
-    * vectors, BASELINE.md `streamscale`). Passing a
+    * vectors, BASELINE.md "Round-16 scale probe: streaming state
+    * growth"). Passing a
     * [[graft.operators.Similarity.fitPqCodebooks]] frame switches the
     * rung to product-quantized state: vectors are PQ-encoded BEFORE the
     * stateful shuffle (the codegen'd
@@ -313,18 +314,19 @@ object EventStreams {
     * reconstructed space: they match the raw rung exactly whenever
     * quantization distortion does not straddle `threshold` (near-dup
     * corpora are far from the threshold on both sides by construction;
-    * IngestStreamingSpec pins raw/PQ keep-set agreement, ScaleProbe
-    * `streamscale` prices the B/doc cut). Fit the books on a bounded
-    * representative sample (the [[graft.operators.Similarity
+    * IngestStreamingSpec pins raw/PQ keep-set agreement, BASELINE.md
+    * "Round-19: PQ-codes-in-state" prices the B/doc cut). Fit the books
+    * on a bounded representative sample (the [[graft.operators.Similarity
     * .fitPqCodebooks]] `fitSample` contract); the bucket key is still
     * computed from the vector the keep-first recurrence sees (raw, or
     * centered when `mean` is set), so candidate generation is unchanged.
     *
     * CENTER MODE (`mean`): a corpus concentrated around a shared
     * direction pins plane signs and collapses streaming buckets exactly
-    * as it collapses the batch twin's (ScaleProbe
-    * `semplanes_concentration`) — and here the damage is worse, because
-    * the per-bucket recurrence is O(bucket-population²) EVERY micro-batch.
+    * as it collapses the batch twin's (BASELINE.md "Round-19:
+    * mean-centering closes the LSH concentration hole") — and here the
+    * damage is worse, because the per-bucket recurrence is
+    * O(bucket-population²) EVERY micro-batch.
     * A stream cannot fit a corpus-wide mean online, so center mode takes
     * a FITTED-MEAN SNAPSHOT: run [[graft.operators.Similarity
     * .fitMeanVector]] on a reference snapshot of the same embedding

@@ -9,7 +9,6 @@ import javax.imageio.ImageIO
 import graft.operators.Media
 import graft.sources.Ingest
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the image-ETL + streaming paths through the public
@@ -19,11 +18,7 @@ import org.apache.spark.sql.functions._
   * process_test_train_Images.py flow on synthetic input. */
 object MediaDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
       val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)

@@ -1,35 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for the named queries (comma-separated in
   * args(0), or "all") into args(1) (default plans/r21) as <query>_<tag>.txt,
   * tag = args(2) (default "before"). Plans are dumped without running the
   * query's ACTION, but query builders execute real Spark jobs at build
   * time (trainer detaches, bm25's tf detach, pagerank's per-round jobs,
   * the streaming gates' whole replay) — a dump is not free. Judge-facing
-  * evidence files for optimization rounds; session conf mirrors Bench so
-  * the dumped plan is the benched plan. */
+  * evidence files for optimization rounds; the session comes from
+  * [[graft.GraftSession]], so the dumped plan is the benched plan. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("all")
     val outDir = if (args.length > 1) args(1) else "plans/r21"
     val tag = if (args.length > 2) args(2) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .config("spark.sql.files.openCostInBytes", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val wanted =
       if (names == "all") graft.SparkEntry.queries.keys.toSeq.sorted
-      else names.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+      else graft.SparkEntry.selectQueries(names, "PlanDump")
+    val spark = graft.GraftSession.local()
+    spark.sparkContext.setLogLevel("ERROR")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- wanted) {
       try {
         val df = graft.SparkEntry.queries(q)(spark, sfDir)

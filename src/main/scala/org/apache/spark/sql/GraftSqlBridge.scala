@@ -5,7 +5,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge to Spark internals that are `private[sql]` in Spark 4:
   * the Column <-> catalyst Expression conversion and the session function
-  * registry. Everything else in graft stays outside the spark namespace.
+  * registry (plus the `private[spark]` listener bus, for the profiler).
+  * Everything else in graft stays outside the spark namespace.
   */
 object GraftSqlBridge {
 
@@ -17,6 +18,18 @@ object GraftSqlBridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The builder the session registry holds under `name`, if any. */
+  def registeredFunction(spark: SparkSession,
+                         name: String): Option[Seq[Expression] => Expression] =
+    spark.sessionState.functionRegistry
+      .lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+
+  /** Block until every listener event posted so far has been delivered
+    * (the listener bus is `private[spark]`), so a listener's buffer is
+    * complete when the action that produced its events returns. */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** True when the session's SQL cache holds no entries — the test hook for
     * the no-caller-orphaned-cache discipline (CacheManager is private[sql]). */

@@ -1386,9 +1386,10 @@ class DedupSimilaritySpec extends SparkSuite {
   }
 
   test("semanticDedup center=true: restores bucket spread on a concentrated corpus, keeps finding dups") {
-    // The measured LSH concentration limit (ScaleProbe `semplanes`
-    // CONCENTRATED leg): one strong shared direction pins the sign of
-    // every plane that weights it, and 256 buckets collapse regardless of
+    // The measured LSH concentration limit (BASELINE.md "Round-19:
+    // mean-centering closes the LSH concentration hole"): one strong
+    // shared direction pins the sign of every plane that weights it, and
+    // 256 buckets collapse regardless of
     // the plane family. Mean-centering removes the shared direction.
     // 2048 isotropic 48-dim vectors, all shifted +5.0 on dim 1; ids
     // 0..15 are planted EXACT duplicates of ids 1000..1015 (exact copies
@@ -1795,8 +1796,8 @@ class DedupSimilaritySpec extends SparkSuite {
   }
 
   test("trainBalancedCentroids splits Zipf-hot cells that plain Lloyd leaves pinned") {
-    // log-uniform cluster membership (the ScaleProbe zipfcell shape,
-    // small): vector = one-hot(cluster) + deterministic jitter, cluster
+    // log-uniform cluster membership (a small Zipf-hot-cell corpus):
+    // vector = one-hot(cluster) + deterministic jitter, cluster
     // sizes power-law — cluster 0 holds ~50% of rows, so a plain k=8
     // Lloyd fit leaves one cell scanning half the corpus on every probe.
     val n = 4000

@@ -224,6 +224,39 @@ class EntrySpec extends SparkSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
+  test("selectQueries keeps order, drops repeats, and rejects unknown or empty selections") {
+    assert(SparkEntry.selectQueries(" q07_minmax_scale,q01_pricing_summary,,q07_minmax_scale ", "T")
+      === Seq("q07_minmax_scale", "q01_pricing_summary"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries("q01_pricing_summary,q01_pricing_sumary", "SPARK_GRAFT_BENCH_ONLY"))
+    assert(e.getMessage.contains("SPARK_GRAFT_BENCH_ONLY"))
+    assert(e.getMessage.contains("unknown queries q01_pricing_sumary"))
+    // the full known list, so the typo can be fixed from the message alone
+    assert(SparkEntry.queries.keys.forall(e.getMessage.contains))
+    intercept[IllegalArgumentException](SparkEntry.selectQueries(" , ", "PlanLint"))
+  }
+
+  test("prefit IVF-PQ cache is keyed on fit parameters and the embeddings file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_key_spec").toFile
+    try {
+      val emb = new java.io.File(dir, "embeddings.parquet")
+      java.nio.file.Files.write(emb.toPath, Array[Byte](1, 2, 3))
+      def key(iterations: Int) = SparkEntry.ivfPqIndexCache(dir.getPath, 8, 8, 16, iterations)
+      val k = key(3)
+      assert(key(3) == k)
+      // two parameter sets must not share one persisted index
+      assert(key(4) != k)
+      assert(SparkEntry.ivfPqIndexCache(dir.getPath, 8, 8, 32, 3) != k)
+      // nor may a regenerated snapshot (new length or mtime) reuse it
+      assert(emb.setLastModified(emb.lastModified() - 60000))
+      assert(key(3) != k)
+      val (touched, mtime) = (key(3), emb.lastModified())
+      java.nio.file.Files.write(emb.toPath, Array[Byte](1, 2, 3, 4))
+      assert(emb.setLastModified(mtime))
+      assert(key(3) != touched)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   test("every query executes and is non-empty at sf0.001") {
     val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val n = fn(spark, sf).count()

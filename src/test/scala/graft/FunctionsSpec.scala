@@ -112,6 +112,47 @@ class FunctionsSpec extends SparkSuite {
       org.apache.spark.unsafe.types.UTF8String.fromString("42")))
   }
 
+  test("registerAll is quiet on a repeat call and still replaces a user function of the same name") {
+    import graft.functions.GraftFunctions
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.GraftSqlBridge
+    def graftBuildersRegistered(): Boolean = GraftFunctions.sqlBuilders.forall {
+      case (name, b) => GraftSqlBridge.registeredFunction(spark, name).exists(_ eq b)
+    }
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-register-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("replaced a previously registered function")) replaced.add(msg)
+      }
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    capture.start()
+    root.addAppender(capture)
+    try {
+      GraftFunctions.registerAll(spark)
+      assert(graftBuildersRegistered())
+      replaced.clear()
+      GraftFunctions.registerAll(spark)
+      assert(graftBuildersRegistered())
+      assert(replaced.isEmpty, s"repeat registerAll logged: ${replaced.toArray.mkString("; ")}")
+      // a user function under one of graft's names is still replaced
+      spark.udf.register("rolling_hash", (_: String) => -1L)
+      assert(!GraftSqlBridge.registeredFunction(spark, "rolling_hash")
+        .exists(_ eq GraftFunctions.sqlBuilders.toMap.apply("rolling_hash")))
+      GraftFunctions.registerAll(spark)
+      assert(graftBuildersRegistered())
+      assert(spark.sql("SELECT rolling_hash('ab')").head().getLong(0) === 3105L)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("aggregate functions work from SQL after registerAll") {
     graft.functions.GraftFunctions.registerAll(spark)
     Seq(("a", Array(1.0f, 3.0f), 5.0, 1L), ("a", Array(3.0f, 5.0f), 9.0, 2L))

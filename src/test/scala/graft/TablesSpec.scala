@@ -166,10 +166,10 @@ class TablesSpec extends SparkSuite {
       == "/nonexistent/x.parquet")
   }
 
-  test("SplitLayout: a big monolithic file rewrites once, content-identical") {
-    import graft.sources.SplitLayout
-    val dir = Files.createTempDirectory("graft_split_spec2").toFile
-    // ~200 KB single parquet file (above the 128 KB threshold), one task
+  /** ~200 KB single parquet file (above SplitLayout's 128 KB threshold),
+    * written by one task into a fresh temp dir. */
+  private def bigMonolithic(prefix: String): java.io.File = {
+    val dir = Files.createTempDirectory(prefix).toFile
     val src = new java.io.File(dir, "big.parquet")
     val df = spark.range(20000).selectExpr("id", "repeat('x', id % 37) AS pad",
       "CAST(id * 1.5 AS DOUBLE) AS v")
@@ -178,6 +178,12 @@ class TablesSpec extends SparkSuite {
       .find(_.getName.endsWith(".parquet")).get
     Files.move(part.toPath, src.toPath)
     assume(src.length() >= 128L * 1024, s"fixture too small: ${src.length()}")
+    src
+  }
+
+  test("SplitLayout: a big monolithic file rewrites once, content-identical") {
+    import graft.sources.SplitLayout
+    val src = bigMonolithic("graft_split_spec2")
     val norm = SplitLayout.normalized(spark, src.getPath)
     assert(norm != src.getPath, "big monolithic file must be rewritten")
     val files = new java.io.File(norm).listFiles().count(_.getName.endsWith(".parquet"))
@@ -190,5 +196,16 @@ class TablesSpec extends SparkSuite {
     val mtime = new java.io.File(norm, "_SUCCESS").lastModified()
     assert(SplitLayout.normalized(spark, src.getPath) == norm)
     assert(new java.io.File(norm, "_SUCCESS").lastModified() == mtime)
+  }
+
+  test("SplitLayout: the cache key includes the file count (core count)") {
+    import graft.sources.SplitLayout
+    val src = bigMonolithic("graft_split_spec3")
+    // a 4-core run and a 32-core run must not share one rewrite: the first
+    // writer's file count would fix every later run's scan width
+    assert(SplitLayout.cacheDir(src.getPath, 4) != SplitLayout.cacheDir(src.getPath, 32))
+    val files = spark.sparkContext.defaultParallelism.max(2)
+    assert(SplitLayout.normalized(spark, src.getPath) ==
+      SplitLayout.cacheDir(src.getPath, files).getPath)
   }
 }
