@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Driver-run benchmark: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -77,11 +79,13 @@ object Bench {
     //                      oracle-degenerate twin); q197 measures the path
     //   q202_unigram_sample_twin — q201's plumbing on the single-char
     //                      vocab (same twin pattern); q201 measures FFBS
+    // The names go through the selector even when the trim is off, so a
+    // renamed twin fails the run instead of re-entering the timed loop.
+    val twins = SparkEntry.selectQueries("q45_group_topk,q79_cc_star,q101_binary_ann," +
+      "q198_unigram_char_twin,q202_unigram_sample_twin,q209_unigram_sample_occ_twin",
+      "Bench twin trim").toSet
     val benchSkip: Set[String] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ALL").exists(_ == "1")) Set.empty
-      else Set("q45_group_topk", "q79_cc_star", "q101_binary_ann",
-        "q198_unigram_char_twin", "q202_unigram_sample_twin",
-        "q209_unigram_sample_occ_twin")
+      if (sys.env.get("SPARK_GRAFT_BENCH_ALL").exists(_ == "1")) Set.empty else twins
     // Run order is a seeded shuffle, not alphabetical: when the budget (below)
     // cuts the tail to one cold pass, an alphabetical order ALWAYS sacrifices
     // the same late-alphabet queries (round 9's driver run cold-passed
@@ -127,11 +131,13 @@ object Bench {
       probeShared = Some(f)
       f
     }
+    val Seq(probeEval, probeCalibration) =
+      SparkEntry.selectQueries("q137_probe_eval,q158_probe_calibration", "Bench fit reuse")
     val fitReuse: Map[String, () => org.apache.spark.sql.DataFrame] =
       if (!fitReuseOn) Map.empty
       else Map(
-        "q137_probe_eval" -> (() => SparkEntry.probeEvalFrom(probeSharedFrame())),
-        "q158_probe_calibration" -> (() => SparkEntry.probeCalibrationFrom(probeSharedFrame())))
+        probeEval -> (() => SparkEntry.probeEvalFrom(probeSharedFrame())),
+        probeCalibration -> (() => SparkEntry.probeCalibrationFrom(probeSharedFrame())))
     def runOnce(name: String): Double = {
       // shared-fit setup is NOT part of the timed section
       val frame = fitReuse.get(name).map(_.apply())
@@ -140,7 +146,7 @@ object Bench {
         frame.getOrElse(SparkEntry.queries(name)(spark, sfDir))
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         // A failed attempt must not contribute its (fast) time-to-failure to
         // the min — record +inf; all-passes-failed reports -1 below so the
@@ -274,7 +280,7 @@ object Bench {
       java.nio.file.Files.write(outPath,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] record written to $outPath")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] BENCH_SELF write failed: ${e.getMessage}")
     }
     // Stop Spark BEFORE printing: shutdown logging must not interleave after

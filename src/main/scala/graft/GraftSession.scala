@@ -41,7 +41,14 @@ object GraftSession {
       // formula's self-scaling term in charge; combined with the
       // SplitLayout row-group normalization the small-SF scans run at full
       // width, the same shape a production multi-file input gets for free.
-      "spark.sql.files.openCostInBytes" -> "8192")
+      "spark.sql.files.openCostInBytes" -> "8192",
+      // One generation of the testdata stores events.ts as int64 nanos,
+      // which Spark 4 refuses to read unless this is set; Tables.load then
+      // truncates the long to micros. The parquet reader consults the conf
+      // when the scan executes, not when it is planned, so it cannot be
+      // scoped to one read: it is session-wide from the start, and no
+      // query's result depends on which query read events first.
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val builder = SparkSession.builder().master(s"local[$cpus]").appName("graft")
     conf.foreach { case (k, v) => builder.config(k, sys.props.getOrElse(k, v)) }
     val spark = builder.getOrCreate()

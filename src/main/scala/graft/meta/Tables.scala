@@ -11,11 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * matching the DuckDB oracle's naive TIMESTAMP so parquet outputs compare
   * bit-for-bit. `events.ts` has changed physical parquet type between
   * testdata generations — nanosecond int64 (which Spark 4 can only read via
-  * `spark.sql.legacy.parquet.nanosAsLong`) in one generation, plain
-  * `timestamp[us]` in another — so the loader branches on the dataType the
-  * scan actually produced instead of assuming either: LongType gets the
-  * nanos→micros truncation (what DuckDB's `CAST(ts AS TIMESTAMP)` does),
-  * any timestamp flavor is cast straight to TIMESTAMP_NTZ.
+  * `spark.sql.legacy.parquet.nanosAsLong`, which [[graft.GraftSession]]
+  * sets) in one generation, plain `timestamp[us]` in another — so the
+  * loader branches on the dataType the scan actually produced instead of
+  * assuming either: LongType gets the nanos→micros truncation (what
+  * DuckDB's `CAST(ts AS TIMESTAMP)` does), any timestamp flavor is cast
+  * straight to TIMESTAMP_NTZ.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -23,8 +24,6 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Route monolithic single-row-group snapshots through the split-layout
     // cache (see [[graft.sources.SplitLayout]]): same rows, same schema,
     // but the scan parallelizes. A no-op for multi-file/small inputs.

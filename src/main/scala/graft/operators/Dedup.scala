@@ -1060,7 +1060,7 @@ object Dedup {
       // Change detection folded INTO the round's single job: the self row
       // is tagged, so one groupBy yields both the new min label and the old
       // (self) label — no extra join — and the changed-row count rides the
-      // detach's materialization pass as an accumulator
+      // detach's materialization pass as an observed metric
       // ([[Relational.detachWithFlagCount]]; boolean-grade, and the loop
       // only ever branches on changed == 0). One job per round, down from
       // the r21 detach + count pair.

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 
 /** Join / set / order operators (SURVEY §2.4, §2.9, §2.10).
   *
@@ -51,12 +51,24 @@ object Relational {
   /** [[detach]] with a boolean-flag row count folded into the SAME
     * materialization job — one job per fixpoint round instead of two for
     * iterative operators whose only per-round scalar is "did anything
-    * change". The count is boolean-grade (exact for == 0 / > 0, can
-    * overcount under task retry — see GraftSqlBridge.detachWithFlagCount);
-    * callers must only branch on zero/nonzero. */
+    * change". The count rides an [[org.apache.spark.sql.Observation]] of
+    * the detach's own pass (`count`, not `sum`, so empty input gives 0).
+    *
+    * The count is BOOLEAN-GRADE, not an exact statistic: observed metrics
+    * are accumulators, and a task recomputed after a lost shuffle or
+    * block can add its partition again, so the value can overcount under
+    * task retry. It can never turn zero into nonzero or nonzero into zero
+    * (a retry of a zero-flag partition adds zero), so `count == 0` /
+    * `count > 0` tests are exact; callers must only branch on those and
+    * pay a separate job when they need the exact count. */
   private[graft] def detachWithFlagCount(df: DataFrame,
-                                         flagCol: String): (DataFrame, Long) =
-    org.apache.spark.sql.GraftSqlBridge.detachWithFlagCount(df, flagCol)
+                                         flagCol: String): (DataFrame, Long) = {
+    require(df.schema(flagCol).dataType == BooleanType,
+      s"detachWithFlagCount: $flagCol must be boolean, is ${df.schema(flagCol).dataType}")
+    val obs = Observation()
+    val detached = detach(df.observe(obs, count(when(col(flagCol), 1)).as("flagged")))
+    (detached, obs.get("flagged").asInstanceOf[Long])
+  }
 
   /** Attach a dense 0-based row index following `orderCols`.
     *

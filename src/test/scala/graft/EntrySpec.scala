@@ -1,55 +1,36 @@
 package graft
 
 /** Driver-contract smoke: entry() non-empty, every query runs at sf0.001,
-  * every oracle key has a query (and vice versa where SQL-expressible). */
+  * and the query registry pairs every query with its check. */
 class EntrySpec extends SparkSuite {
 
   test("entry() returns rows (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys match queries keys (sketch queries are rows-only)") {
-    // Sketch outputs (HLL++ ndv) are engine-specific, so these queries
-    // intentionally ship without a SQL oracle — the driver records the
-    // weaker rows-only check for them.
-    val rowsOnly = Set("q59_sketch_profile", "q70_winsorize_sketch",
-      // the Lloyd-fit family stays rows-only on REAL data; each tier now
-      // also carries an exact point-mass hash gate: q221 (flat PQ), q222
-      // (OPQ), q223 (IVF-PQ), q224 (persisted index serve)
-      "q71_robust_sketch", "q93_pq_ann", "q100_ivfpq_ann",
-      "q106_ivfpq_prefit", "q136_bpe_merges", "q191_pq_bigprobe",
-      // DEFLATE output bytes are zlib-version-dependent: deterministic
-      // within the engine, not portable to a DuckDB oracle
-      "q173_compression_gate",
-      // eigendecomposition (Jacobi) has no SQL form; DecompSpec pins the
-      // decomposition invariants and determinism, q183 pins the shared
-      // covariance fit against covar_pop
-      "q184_pca_spectrum", "q185_mahalanobis", "q186_whiten_gram",
-      "q187_linear_probe", "q188_probe_cv",
-      // unigram-LM tokenizer: the EM fit is iterative (like q136) and
-      // Viterbi/FFBS are DPs with no SQL form; all pinned against
-      // brute-force references in TextAnalysisSpec (q198/q202 are the
-      // hash-matched degenerate-lattice twins)
-      "q196_unigram_lm", "q197_unigram_encode", "q201_unigram_sample",
-      "q208_unigram_sample_occ",
-      // OPQ = Jacobi rotation + the Lloyd-fit PQ family (same rows-only
-      // category as q93/q100); contracts pinned in DedupSimilaritySpec,
-      // and q222_opq_ann_twin exact-gates the full rotation+PQ+ADC path
-      // on a point-mass fixture (q221's trick: ksub = |corpus| makes PQ
-      // lossless under ANY orthogonal R, and cosine invariance forces
-      // the ordering)
-      "q199_opq_ann",
-      // the round-15 fit ladder composed (balanced centroids + refined
-      // OPQ + sample-fit IVF-PQ + salted join) — Lloyd family, rows-only.
-      // Every delta of q207/q191 over the q221-q225 exact-gated tiers is
-      // now gated or argued: the salted distributed corpus-vs-corpus
-      // join has its own driver hash gate (q225, forced salting at
-      // codesPerSalt=2); balanced splitting + Procrustes refinement's
-      // fixpoint on a point-mass fixture is not provably stable across
-      // SVD sign conventions — the q173-ceiling class of impossibility,
-      // so q207 itself stays rows-only permanently
-      "q207_balanced_opq_ann")
-    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet -- rowsOnly)
+  test("registry: 230 queries, 210 with an oracle, 20 rows-only with a named reason") {
+    import graft.catalog._
+    val reg = SparkEntry.registry
+    assert(reg.size === 230)
+    val oracles = reg.collect { case (name, Q(_, _, Oracle(sql))) => name -> sql }
+    val rowsOnly = reg.values.collect { case Q(_, _, r: RowsOnly) => r }
+    assert(oracles.size === 210 && rowsOnly.size === 20)
+    assert(rowsOnly.forall(_.reason.trim.nonEmpty))
+    assert(oracles.values.forall(_.trim.nonEmpty))
+    // the views the tools read are the registry, in its order
+    assert(SparkEntry.queries.keys.toSeq === reg.keys.toSeq)
+    assert(SparkEntry.oracleSql === oracles)
+  }
+
+  test("a query without a check does not compile; a repeated name throws") {
+    import graft.catalog._
+    assertCompiles("""Q("q_x", (s, dir) => s.read.parquet(dir), RowsOnly("no SQL form"))""")
+    assertDoesNotCompile("""Q("q_x", (s, dir) => s.read.parquet(dir))""")
+    intercept[IllegalArgumentException](RowsOnly(" "))
+    val q = Q("q_x", (s, dir) => s.read.parquet(dir), Oracle("SELECT 1"))
+    val e = intercept[IllegalArgumentException](
+      Q.index(Seq(q, Q("q_y", q.build, Oracle("SELECT 2")), q.copy(check = RowsOnly("twin")))))
+    assert(e.getMessage.contains("q_x") && !e.getMessage.contains("q_y"))
   }
 
   // q218's promotion note (VERDICT-r17 item 6): the FLOOR side of the

@@ -167,9 +167,7 @@ class IngestStreamingSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_real_events").toString
     Files.copy(src.toPath, java.nio.file.Path.of(dir, "events.parquet"))
     // the int64-nanos testdata generation throws on a bare read unless the
-    // legacy conf is set — Tables.load sets it for its own reads, but this
-    // schema probe must not depend on a Tables call having run first
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // legacy conf is set — GraftSession.local sets it for the whole session
     val physical = spark.read.parquet(dir).schema
     val stream = graft.meta.Tables.normalizeEventTs(
       EventStreams.readFileStream(spark, dir, physical, maxFilesPerTrigger = 64))

@@ -50,6 +50,25 @@ class TablesSpec extends SparkSuite {
     assert(loaded.select("ts").head.getAs[LocalDateTime]("ts") == wall)
   }
 
+  test("load(events) leaves the session conf as it found it") {
+    // The session factory (TestSpark's too) sets the legacy nanos conf up
+    // front; a load that set it itself would make later reads depend on
+    // which query loaded events first.
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.conf.get(key) === "true")
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampNTZType)))
+    val sfDir = stage(spark.createDataFrame(java.util.Arrays.asList(Row(1L, wall)), schema))
+    val original = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val before = spark.conf.getAll.toSet
+      Tables.load(spark, sfDir, "events").collect()
+      val after = spark.conf.getAll.toSet
+      assert(after === before, s"set: ${after -- before}, unset: ${before -- after}")
+    } finally original.foreach(spark.conf.set(key, _))
+  }
+
   test("load(events) casts a TIMESTAMP_LTZ generation to NTZ (UTC session)") {
     import spark.implicits._
     // Spark writes TimestampType as isAdjustedToUTC=true micros — the LTZ arm.
