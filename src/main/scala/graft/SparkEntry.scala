@@ -132,19 +132,6 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] =
     registry.collect { case (name, Q(_, _, Oracle(sql))) => name -> sql }
 
-  /** Session conf for the five streaming driver gates (q205/q206/q210/
-    * q215/q217): the RocksDB state store provider (`transformWithState`
-    * requires it) PLUS a 4-partition stateful shuffle for the gate's
-    * duration. The stateful exchange opens, commits, and checkpoints one
-    * RocksDB instance PER SHUFFLE PARTITION per trigger — on the gates'
-    * 96-row/3k-row fixtures, 32 stores x 2-3 triggers is pure fixed cost
-    * (measured: the five gates total 14.8 s at 32 partitions vs 9.7 s at
-    * 4; see BASELINE.md round-18). Partition count is semantics-free
-    * here: state is per-key, the two-wave retroactive-flip and
-    * event-time-timer paths being gated are partition-count-invariant,
-    * and every run starts from a fresh checkpoint. Production streams
-    * size partitions to state VOLUME, not trigger overhead — this helper
-    * is gate-fixture tuning, not a recommendation to run small. */
   /** Scratch dir for the streaming/index driver gates, recursively deleted
     * at JVM exit (shutdown hook) — the gates' returned frames read these
     * files LAZILY, so eager deletion inside the query builder would break
@@ -230,6 +217,19 @@ object SparkEntry {
     in
   }
 
+  /** Session conf for the five streaming driver gates (q205/q206/q210/
+    * q215/q217): the RocksDB state store provider (`transformWithState`
+    * requires it) PLUS a 4-partition stateful shuffle for the gate's
+    * duration. The stateful exchange opens, commits, and checkpoints one
+    * RocksDB instance PER SHUFFLE PARTITION per trigger — on the gates'
+    * 96-row/3k-row fixtures, 32 stores x 2-3 triggers is pure fixed cost
+    * (measured: the five gates total 14.8 s at 32 partitions vs 9.7 s at
+    * 4; see BASELINE.md round-18). Partition count is semantics-free
+    * here: state is per-key, the two-wave retroactive-flip and
+    * event-time-timer paths being gated are partition-count-invariant,
+    * and every run starts from a fresh checkpoint. Production streams
+    * size partitions to state VOLUME, not trigger overhead — this helper
+    * is gate-fixture tuning, not a recommendation to run small. */
   private[graft] def withStreamGateConf[T](s: SparkSession,
       stateProvider: String = "rocksdb",
       noDataBatches: Boolean = true)(body: => T): T = {

@@ -644,7 +644,7 @@ private[graft] object AnnQueries {
         Similarity.fitOpqRotation(emb, m = 8, fitSample = fitPred),
         m = 8, ksub = 16, pqIterations = 2, rounds = 1, fitSample = fitPred)
       val rotated = Relational.detach(Similarity.opqRotate(emb, rot))
-      // trainBalancedCentroids detaches its result itself (r21)
+      // trainBalancedCentroids returns a local (storage-free) frame
       val cents = Similarity.trainBalancedCentroids(
         rotated, 8, 2, maxCellFrac = 0.3, splitRounds = 2, fitSample = fitPred)
       val books = Similarity.fitIvfPqCodebooks(rotated, cents, m = 8,

@@ -27,11 +27,7 @@ case class NearestCells(child: Expression, centIds: Seq[Long],
   @transient private lazy val ids: Array[Long] = centIds.toArray
   @transient private lazy val vecs: Array[Array[Double]] =
     centVecs.map(_.toArray).toArray
-  @transient private lazy val norms: Array[Double] = vecs.map { v =>
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    s
-  }
+  @transient private lazy val norms: Array[Double] = vecs.map(NearestCentroid.selfNorm)
   @transient private lazy val childIsFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
@@ -51,52 +47,20 @@ case class NearestCells(child: Expression, centIds: Seq[Long],
       s"nearest_cells expects array<float>/array<double>, got ${other.catalogString}")
   }
 
-  /** Fused pass: per centroid the same dot/norm loop as
-    * [[NearestCentroid.kernel]], feeding a p-slot insertion buffer kept
-    * sorted (cos DESC, id ASC) — p is tiny (2-8), so the shift insert beats
-    * any heap. Returns min(p, numCentroids) ids, best first. */
+  /** Fused pass: per centroid the cosine of [[NearestCentroid.cosine]],
+    * feeding a p-slot insertion buffer kept sorted (cos DESC, id ASC) — p
+    * is tiny (2-8), so the shift insert beats any heap. Returns
+    * min(p, numCentroids) ids, best first. */
   def kernel(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    var na = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (childIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      na += x * x
-      i += 1
-    }
+    val x = NearestCentroid.doubles(a, childIsFloat)
+    val na = NearestCentroid.selfNorm(x)
     val p = math.min(topP, vecs.length)
     val bc = new Array[Double](p)
     val bi = new Array[Long](p)
     var size = 0
     var c = 0
     while (c < vecs.length) {
-      val v = vecs(c)
-      var dot = 0.0
-      var j = 0
-      var cos = 0.0
-      if (v.length == n) {
-        while (j < n) {
-          val x = if (childIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-          dot += x * v(j)
-          j += 1
-        }
-        val nb = norms(c)
-        cos = if (na == 0.0 || nb == 0.0) 0.0 else dot / (Math.sqrt(na) * Math.sqrt(nb))
-      } else {
-        // Mismatched lengths: norms over the same min span as the dot, so
-        // ranking ties out with CosineSimilarity (see NearestCentroid).
-        val m = math.min(n, v.length)
-        var naM = 0.0
-        var nbM = 0.0
-        while (j < m) {
-          val x = if (childIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-          dot += x * v(j)
-          naM += x * x
-          nbM += v(j) * v(j)
-          j += 1
-        }
-        cos = if (naM == 0.0 || nbM == 0.0) 0.0 else dot / (Math.sqrt(naM) * Math.sqrt(nbM))
-      }
+      var cos = NearestCentroid.cosine(x, na, vecs(c), norms(c))
       // NaN (a NaN element in probe or centroid) must rank LAST, not poison
       // slot 0 via always-false comparisons: normalize to -inf so the
       // buffer's ordering logic stays total (same policy as NearestCentroid)
@@ -113,7 +77,7 @@ case class NearestCells(child: Expression, centIds: Seq[Long],
       c += 1
     }
     val out = new Array[Any](size)
-    i = 0
+    var i = 0
     while (i < size) { out(i) = bi(i); i += 1 }
     new GenericArrayData(out)
   }

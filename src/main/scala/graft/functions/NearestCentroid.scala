@@ -32,13 +32,8 @@ case class NearestCentroid(child: Expression, centIds: Seq[Long],
   @transient private lazy val vecs: Array[Array[Double]] =
     centVecs.map(_.toArray).toArray
   // Centroid self-norms are row-independent: computed once per task, not
-  // once per (row x centroid). Summation order matches the fused kernel's
-  // nb accumulator (index order), so cosines are bit-identical.
-  @transient private lazy val norms: Array[Double] = vecs.map { v =>
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    s
-  }
+  // once per (row x centroid).
+  @transient private lazy val norms: Array[Double] = vecs.map(NearestCentroid.selfNorm)
   @transient private lazy val childIsFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
@@ -58,66 +53,8 @@ case class NearestCentroid(child: Expression, centIds: Seq[Long],
       s"nearest_centroid expects array<float>/array<double>, got ${other.catalogString}")
   }
 
-  /** Fused argmax pass: per centroid, the same dot/norm loop as
-    * [[CosineSimilarity.kernel]] — including on length-mismatched vectors,
-    * where all three sums cover the min span; equal-length centroids take
-    * the fast path with the probe's self-norm hoisted out of the loop
-    * (computed once, not k times). */
-  def kernel(a: ArrayData): Long = {
-    val n = a.numElements()
-    var na = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (childIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      na += x * x
-      i += 1
-    }
-    // Seed with the first centroid so the result is ALWAYS a real id: with
-    // a NaN probe element every cosine is NaN, no comparison ever wins, and
-    // an unseeded loop would return a sentinel id that exists in no
-    // centroid set (silently lost rows downstream). NaN cosines LOSE here
-    // by design — a garbage vector must not capture the corpus (SQL's
-    // NaN-sorts-greatest would rank it first; documented divergence).
-    var best = Double.NegativeInfinity
-    var bestId = ids(0)
-    var c = 0
-    while (c < vecs.length) {
-      val v = vecs(c)
-      var dot = 0.0
-      var j = 0
-      var cos = 0.0
-      if (v.length == n) {
-        // Fast path (the contract case): probe self-norm hoisted out of the
-        // centroid loop, centroid self-norms precomputed per task.
-        while (j < n) {
-          val x = if (childIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-          dot += x * v(j)
-          j += 1
-        }
-        val nb = norms(c)
-        cos = if (na == 0.0 || nb == 0.0) 0.0 else dot / (Math.sqrt(na) * Math.sqrt(nb))
-      } else {
-        // Length-mismatched input: CosineSimilarity.kernel computes dot AND
-        // both norms over the min span, so recompute both norms over that
-        // same span here — otherwise assignment could disagree with a
-        // scored-join formulation on malformed vectors.
-        val m = math.min(n, v.length)
-        var naM = 0.0
-        var nbM = 0.0
-        while (j < m) {
-          val x = if (childIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-          dot += x * v(j)
-          naM += x * x
-          nbM += v(j) * v(j)
-          j += 1
-        }
-        cos = if (naM == 0.0 || nbM == 0.0) 0.0 else dot / (Math.sqrt(naM) * Math.sqrt(nbM))
-      }
-      if (cos > best || (cos == best && ids(c) < bestId)) { best = cos; bestId = ids(c) }
-      c += 1
-    }
-    bestId
-  }
+  def kernel(a: ArrayData): Long =
+    ids(NearestCentroid.nearest(NearestCentroid.doubles(a, childIsFloat), ids, vecs, norms))
 
   override protected def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
 
@@ -128,4 +65,60 @@ case class NearestCentroid(child: Expression, centIds: Seq[Long],
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object NearestCentroid {
+
+  /** A float or double array as a fresh `Array[Double]` (floats widen exactly). */
+  def doubles(a: ArrayData, isFloat: Boolean): Array[Double] =
+    if (!isFloat) a.toDoubleArray()
+    else Array.tabulate(a.numElements())(i => a.getFloat(i).toDouble)
+
+  /** Squared self-norm summed in index order — the `nb` accumulator of
+    * [[CosineSimilarity.kernel]], so cosines stay bit-identical. */
+  def selfNorm(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    s
+  }
+
+  /** Cosine of `x` against `v` given both [[selfNorm]]s, with
+    * [[CosineSimilarity.kernel]]'s arithmetic: on length-mismatched vectors
+    * dot AND both norms cover the min span, so assignment agrees with a
+    * scored-join formulation on malformed vectors. Zero norms score 0. */
+  def cosine(x: Array[Double], na: Double, v: Array[Double], nb: Double): Double = {
+    var dot = 0.0
+    var j = 0
+    if (v.length == x.length) {
+      while (j < x.length) { dot += x(j) * v(j); j += 1 }
+      if (na == 0.0 || nb == 0.0) 0.0 else dot / (Math.sqrt(na) * Math.sqrt(nb))
+    } else {
+      val m = math.min(x.length, v.length)
+      var naM = 0.0
+      var nbM = 0.0
+      while (j < m) { dot += x(j) * v(j); naM += x(j) * x(j); nbM += v(j) * v(j); j += 1 }
+      if (naM == 0.0 || nbM == 0.0) 0.0 else dot / (Math.sqrt(naM) * Math.sqrt(nbM))
+    }
+  }
+
+  /** Index of the max-cosine centroid of `x` (ties to the smallest id) —
+    * [[NearestCentroid.kernel]] on plain arrays, shared with the driver-side
+    * Lloyd fits of [[graft.operators.Similarity]]. The set must be non-empty. */
+  def nearest(x: Array[Double], ids: Array[Long], vecs: Array[Array[Double]],
+              norms: Array[Double]): Int = {
+    val na = selfNorm(x)
+    // Seeded with the first centroid so the result is ALWAYS a real id even
+    // when every cosine is NaN. NaN cosines LOSE by design: a garbage vector
+    // must not capture the corpus (documented divergence from SQL's
+    // NaN-sorts-greatest).
+    var best = Double.NegativeInfinity
+    var bestC = 0
+    var c = 0
+    while (c < vecs.length) {
+      val cos = cosine(x, na, vecs(c), norms(c))
+      if (cos > best || (cos == best && ids(c) < ids(bestC))) { best = cos; bestC = c }
+      c += 1
+    }
+    bestC
+  }
 }

@@ -47,7 +47,6 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Double]]])
 
   @transient private lazy val vecs: Array[Array[Array[Double]]] =
     books.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val totalDims: Int = vecs.map(_(0).length).sum
   @transient private lazy val childIsFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
@@ -63,16 +62,36 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Double]]])
       s"pq_encode expects array<float>/array<double>, got ${other.catalogString}")
   }
 
-  def kernel(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    if (n != totalDims)
+  def kernel(a: ArrayData): ArrayData =
+    new GenericArrayData(PqEncode.encode(NearestCentroid.doubles(a, childIsFloat), vecs))
+
+  override protected def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
+    defineCodeGen(ctx, ev, v => s"$ref.kernel($v)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqEncode {
+
+  /** The `m` codes of `x` — the arithmetic of [[PqEncode.kernel]] on plain
+    * arrays, shared with the driver-side codebook fit of
+    * [[graft.operators.Similarity.fitPqCodebooks]]. Throws unless `x` has
+    * exactly the books' total length. */
+  def encode(x: Array[Double], books: Array[Array[Array[Double]]]): Array[Int] = {
+    val total = books.foldLeft(0)(_ + _(0).length)
+    if (x.length != total)
       throw new IllegalArgumentException(
-        s"pq_encode expects vectors of length $totalDims (${vecs.length} subspaces), got $n")
-    val out = new Array[Int](vecs.length)
+        s"pq_encode expects vectors of length $total (${books.length} subspaces), got ${x.length}")
+    val out = new Array[Int](books.length)
     var off = 0
     var j = 0
-    while (j < vecs.length) {
-      val book = vecs(j)
+    while (j < books.length) {
+      val book = books(j)
       val dsub = book(0).length
       // NaN distances LOSE (never beat the running best), so a garbage
       // subvector falls back to code 0 instead of poisoning the argmin —
@@ -85,8 +104,7 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Double]]])
         var d2 = 0.0
         var i = 0
         while (i < dsub) {
-          val x = if (childIsFloat) a.getFloat(off + i).toDouble else a.getDouble(off + i)
-          val diff = x - cent(i)
+          val diff = x(off + i) - cent(i)
           d2 += diff * diff
           i += 1
         }
@@ -97,18 +115,8 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Double]]])
       off += dsub
       j += 1
     }
-    new GenericArrayData(out)
+    out
   }
-
-  override protected def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
-    defineCodeGen(ctx, ev, v => s"$ref.kernel($v)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** `pq_lut(probe_vec, cell_vec)` — build the per-probe ADC lookup table of

@@ -262,9 +262,9 @@ object Batching {
   /** Deterministic training-shard plan — the materialize-the-corpus step
     * between sampling/packing and the training loop. Every document gets
     * a reproducible `(shard, pos)` slot from two independent seeded
-    * hashes: `shard = mix(seed ":" id) % nShards` spreads documents
-    * uniformly across shards, and `pos` ranks a SECOND seeded hash
-    * (`seed "~" id`, ties by id) within the shard — so each shard's
+    * hashes ([[shardSlots]]): `shard = mix(seed ":" id) % nShards` spreads
+    * documents uniformly across shards, and `pos` ranks a SECOND seeded
+    * hash (`seed "~" id`, ties by id) within the shard — so each shard's
     * internal order is a seeded global shuffle, never id order (id order
     * is crawl order: source/time-correlated, exactly the structure a
     * training run must not see). Same seed ⇒ byte-identical epoch across
@@ -275,47 +275,45 @@ object Batching {
     * Scale shape: both hashes are one codegen'd narrow projection
     * (poly-31 fold + affine mix, [[Stats.mixHash]]); the only exchange is
     * the shard-keyed window for `pos`, carrying `(id, int64, token
-    * count)` — text enters only [[writeJsonlShards]]' final join-back.
-    * At extreme scale `pos` can swap for [[Relational.withRowIndex]] per
-    * shard, but nShards windows over narrow rows hold far past 100 TB. */
+    * count)`. At extreme scale `pos` can swap for
+    * [[Relational.withRowIndex]] per shard, but nShards windows over
+    * narrow rows hold far past 100 TB. */
   def shardPlan(docs: DataFrame, idCol: String, textCol: String,
                 nShards: Int, seed: Long): DataFrame = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
     import org.apache.spark.sql.expressions.Window
-    val sKey = concat(lit(s"$seed:"), col(idCol).cast("string"))
-    val oKey = concat(lit(s"$seed~"), col(idCol).cast("string"))
     val w = Window.partitionBy("shard").orderBy(col("_ord").asc, col(idCol).asc)
-    docs.select(col(idCol),
-        Stats.hashBucket(sKey, nShards).as("shard"),
-        Stats.mixHash(oKey).as("_ord"),
-        size(graft.operators.TextAnalysis.tokens(col(textCol)))
-          .cast("long").as("n_tokens"))
+    docs.select(Seq(col(idCol)) ++ shardSlots(idCol, nShards, seed) :+
+        size(graft.operators.TextAnalysis.tokens(col(textCol))).cast("long").as("n_tokens"): _*)
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col(idCol), col("shard"), col("pos"), col("n_tokens"))
+  }
+
+  /** [[shardPlan]]'s and [[writeJsonlShards]]' seeded slot hashes:
+    * `shard`, and `_ord`, whose `(_ord, id)` order within a shard is `pos`. */
+  private def shardSlots(idCol: String, nShards: Int, seed: Long): Seq[Column] = {
+    require(nShards > 0, s"nShards must be positive, got $nShards")
+    Seq(Stats.hashBucket(concat(lit(s"$seed:"), col(idCol).cast("string")), nShards).as("shard"),
+      Stats.mixHash(concat(lit(s"$seed~"), col(idCol).cast("string"))).as("_ord"))
   }
 
   /** Materialize the corpus as sharded JSONL under `path/shard=K/` —
     * [[shardPlan]]'s physical form and the hand-off format every training
     * stack ingests: one `{"id":…,"text":…}` object per line, lines in
     * the plan's `pos` order within each shard. Deterministic end-to-end:
-    * same (corpus, nShards, seed) ⇒ byte-identical shard files.
+    * same (corpus, nShards, seed) ⇒ byte-identical shard files. Rows with
+    * a null id get no slot and are not written.
     *
-    * Scale shape: the plan's narrow arm computes slots without text; the
-    * corpus joins back by id ONCE, repartitions by shard (each output
-    * task owns whole shards) and sorts `(shard, pos)` within partitions
-    * only — no global sort. `partitionBy` splits the directories; the
-    * in-task order lands in file order. */
+    * Scale shape: ONE scan of `docs` computes slot hashes and JSON value,
+    * ONE exchange repartitions by shard (each output task owns whole
+    * shards), and a within-partition sort on `(shard, _ord, id)` — the
+    * order `pos` ranks — lands in file order: no join back, no window. */
   def writeJsonlShards(docs: DataFrame, idCol: String, textCol: String,
-                       nShards: Int, seed: Long, path: String): Unit = {
-    val plan = shardPlan(docs, idCol, textCol, nShards, seed)
-      .select(col(idCol), col("shard"), col("pos"))
-    docs.select(col(idCol), col(textCol))
-      .join(plan, Seq(idCol))
-      .select(col("shard"), col("pos"),
-        to_json(struct(col(idCol).as("id"), col(textCol).as("text"))).as("value"))
+                       nShards: Int, seed: Long, path: String): Unit =
+    docs.where(col(idCol).isNotNull)
+      .select(shardSlots(idCol, nShards, seed) :+ col(idCol) :+
+        to_json(struct(col(idCol).as("id"), col(textCol).as("text"))).as("value"): _*)
       .repartition(nShards, col("shard"))
-      .sortWithinPartitions("shard", "pos")
+      .sortWithinPartitions("shard", "_ord", idCol)
       .select("shard", "value")
       .write.mode("overwrite").partitionBy("shard").text(path)
-  }
 }

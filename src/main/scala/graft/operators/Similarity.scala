@@ -3,8 +3,12 @@ package graft.operators
 import graft.functions.GraftFunctions.cosine_similarity
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType,
+  ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (north-star extension).
@@ -27,6 +31,15 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   *
   * Distances run through [[graft.functions.CosineSimilarity]] — a fused
   * one-pass native kernel inside whole-stage codegen.
+  *
+  * Quantizer training (Lloyd centroids and PQ codebooks) runs on the
+  * driver: ONE job collects the corpus's first k rows by id (the seeds)
+  * and the first `256·k` rows in `(xxhash64(id), id)` order (FAISS's
+  * `max_points_per_centroid`; a corpus that small is fit whole). Every
+  * iteration is driver arithmetic through the expressions' own kernels
+  * ([[graft.functions.NearestCentroid.nearest]],
+  * [[graft.functions.PqEncode.encode]]). Fits are local frames: no job to
+  * collect, no storage to release. Encode and serve stay distributed.
   */
 object Similarity {
 
@@ -384,18 +397,30 @@ object Similarity {
   /** Fit IVF-PQ codebooks: PQ trained on cell RESIDUALS (vector minus its
     * coarse centroid), the Faiss IVFPQ composition — residuals are small
     * and centered, so the same code budget quantizes them far more finely
-    * than raw vectors. Returns the (subspace, code, centroid) frame of
-    * [[fitPqCodebooks]], fit over the residual field. */
+    * than raw vectors. Returns the (subspace, code, centroid) local frame
+    * of [[fitPqCodebooks]], fit on the driver over the residuals of the
+    * same bounded `256·ksub`-row sample. */
   def fitIvfPqCodebooks(corpus: DataFrame, centroids: DataFrame, m: Int,
                         ksub: Int, iterations: Int,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
-                        fitSample: Option[Column] = None): DataFrame =
-    // sample BEFORE the residual pass so the assignment kernel and the
-    // centroid-shift join prune with the fit
-    fitPqCodebooks(cellResiduals(fitSample.fold(corpus)(corpus.where),
-        centroids, idCol, vecCol),
-      m, ksub, iterations, idCol, vecCol)
+                        fitSample: Option[Column] = None): DataFrame = {
+    val (ids, vecs) = collectCentroids(centroids, idCol, vecCol, "fitIvfPqCodebooks")
+    val c = Cents(ids.toArray, vecs.map(_.toArray).toArray)
+    val (seeds, rows) = hashSample(fitSample.fold(corpus)(corpus.where), ksub, idCol, vecCol)
+    codebookFrame(corpus.sparkSession, pqFit(residuals(seeds.take(ksub), c),
+      residuals(byId(rows, ksub), c), m, ksub, iterations))
+  }
+
+  /** Each row's vector minus its max-cosine centroid — [[cellResiduals]]
+    * on the driver, in the rows' order. */
+  private def residuals(xs: Array[FitRow], c: Cents): Array[Array[Double]] = {
+    val norms = c.vecs.map(graft.functions.NearestCentroid.selfNorm)
+    xs.map { case FitRow(_, x) =>
+      val cv = c.vecs(graft.functions.NearestCentroid.nearest(x, c.ids, c.vecs, norms))
+      Array.tabulate(x.length)(i => x(i) - cv(i))
+    }
+  }
 
   /** IVF-PQ encode: (idCol, cell_id, codes) — the cell id plus the PQ
     * codes of the residual. Narrow except the bounded centroid broadcast;
@@ -668,10 +693,16 @@ object Similarity {
     val mean = if (center) Some(fitMeanVector(corpus, vecCol)) else None
     val src = mean.fold(corpus)(mu => corpus.select(col(idCol),
       centeredGuarded(col(vecCol), mu, "buildIvfPqIndex(center=true)").as(vecCol)))
-    val cents = trainCentroids(src, nCells, iterations, idCol, vecCol)
-    val books = fitIvfPqCodebooks(src, cents, m, ksub, iterations, idCol, vecCol)
-    val enc = ivfPqEncode(src, cents, books, idCol, vecCol)
-    saveIvfPqIndex(dir, IvfPqIndex(cents, books, enc, mean))
+    // one sample job for both fits: each fit's sample is a prefix of the
+    // larger one, so this equals trainCentroids + fitIvfPqCodebooks
+    val (seeds, rows) = hashSample(src, math.max(nCells, ksub), idCol, vecCol)
+    val fit = lloydFit(seeds, byId(rows, nCells), nCells, iterations)
+    val books = pqFit(residuals(seeds.take(ksub), fit), residuals(byId(rows, ksub), fit),
+      m, ksub, iterations)
+    val cents = centroidFrame(corpus.sparkSession, fit, idCol, vecCol)
+    val booksDf = codebookFrame(corpus.sparkSession, books)
+    val enc = ivfPqEncode(src, cents, booksDf, idCol, vecCol)
+    saveIvfPqIndex(dir, IvfPqIndex(cents, booksDf, enc, mean))
     loadIvfPqIndex(corpus.sparkSession, dir, idCol)
   }
 
@@ -746,51 +777,108 @@ object Similarity {
     index.copy(encoded = grown)
   }
 
+  /** One fit-sample row: its id (the seed and tie order) and its vector. */
+  private final case class FitRow(id: Any, vec: Array[Double])
+
+  /** Ascending id order with nulls first — Spark's `orderBy(id)`. */
+  private val IdOrder: Ordering[Any] = (a: Any, b: Any) =>
+    if (a == null || b == null) (a != null).compareTo(b != null)
+    else a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** The driver fits' one Spark job over the rows with a non-null vector:
+    * each task keeps its first `256·k` rows in `(xxhash64(id), id)` order
+    * (FAISS's `max_points_per_centroid`) and its first `k` by id; the
+    * driver merges them into (the corpus's first `k` rows by id — the
+    * seeds, whatever the sample holds — and the sample in hash order). Any
+    * prefix of either serves a smaller `k` ([[buildIvfPqIndex]]). */
+  private def hashSample(fit: DataFrame, k: Int, idCol: String,
+                         vecCol: String): (Array[FitRow], Array[FitRow]) = {
+    val (cap, nSeeds) = (sampleCap(k), math.max(k, 0))
+    val hashOrder = Ordering.by((x: (Long, FitRow)) => (x._1, x._2.id))(
+      Ordering.Tuple2(Ordering.Long, IdOrder))
+    val idOrder = Ordering.by((x: (Long, FitRow)) => x._2.id)(IdOrder)
+    val parts = fit.where(col(vecCol).isNotNull)
+      .select(xxhash64(col(idCol)), col(idCol), col(vecCol).cast("array<double>"))
+      .rdd.mapPartitions { it =>
+        val (h, s) = (mutable.PriorityQueue.empty(hashOrder), mutable.PriorityQueue.empty(idOrder))
+        it.foreach { r =>
+          val x = (r.getLong(0), FitRow(r.get(1), r.getSeq[Double](2).toArray))
+          h += x; s += x
+          if (h.size > cap) h.dequeue()
+          if (s.size > nSeeds) s.dequeue()
+        }
+        Iterator((h.toArray, s.toArray))
+      }.collect()
+    (parts.flatMap(_._2).sorted(idOrder).take(nSeeds).map(_._2),
+      parts.flatMap(_._1).sorted(hashOrder).take(cap).map(_._2))
+  }
+
+  private def sampleCap(k: Int): Int = math.min(256L * math.max(k, 0), Int.MaxValue).toInt
+
+  /** The `k`-fit prefix of a [[hashSample]], sorted by id. */
+  private def byId(rows: Array[FitRow], k: Int): Array[FitRow] =
+    rows.take(sampleCap(k)).sortBy(_.id)(IdOrder)
+
+  /** A driver-side centroid set (the fits keep ids ascending). */
+  private final case class Cents(ids: Array[Long], vecs: Array[Array[Double]])
+
+  /** The first `k` seeds (ids cast to long as [[collectCentroids]] does)
+    * plus `iterations` Lloyd passes over the sample `xs`. */
+  private def lloydFit(seeds: Array[FitRow], xs: Array[FitRow], k: Int,
+                       iterations: Int): Cents = {
+    val c0 = seeds.take(k)
+    require(c0.forall(_.id.isInstanceOf[Number]), "centroid ids must be non-null numbers")
+    val vs = xs.map(_.vec)
+    (0 until iterations).foldLeft(Cents(c0.map(_.id.asInstanceOf[Number].longValue),
+      c0.map(_.vec)))((c, _) => lloydPass(vs, c))
+  }
+
+  /** One Lloyd pass: every row joins its max-cosine centroid and each cell
+    * becomes its members' mean under [[graft.functions.VectorAvg]]'s rule
+    * (the first member fixes the length). Cells with no member drop out. */
+  private def lloydPass(xs: Array[Array[Double]], c: Cents): Cents = {
+    require(c.ids.nonEmpty || xs.isEmpty, "Lloyd fit: centroid set is empty")
+    val norms = c.vecs.map(graft.functions.NearestCentroid.selfNorm)
+    val sums = new Array[Array[Double]](c.ids.length)
+    val counts = new Array[Long](c.ids.length)
+    xs.foreach { x =>
+      val i = graft.functions.NearestCentroid.nearest(x, c.ids, c.vecs, norms)
+      if (sums(i) == null) sums(i) = new Array[Double](x.length)
+      for (d <- 0 until math.min(x.length, sums(i).length)) sums(i)(d) += x(d)
+      counts(i) += 1
+    }
+    val live = c.ids.indices.filter(counts(_) > 0)
+    Cents(live.map(c.ids).toArray, live.map(i => sums(i).map(_ / counts(i))).toArray)
+  }
+
+  /** A local frame `(idCol long, vecCol array<double>)`: no job, no storage. */
+  private def centroidFrame(spark: org.apache.spark.sql.SparkSession, c: Cents,
+                            idCol: String, vecCol: String): DataFrame =
+    spark.createDataFrame(
+      c.ids.indices.map(i => Row(c.ids(i), c.vecs(i).toSeq)).asJava,
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+        StructField(vecCol, ArrayType(DoubleType, containsNull = false), nullable = false))))
+
   /** Lloyd-iteration centroid training for IVF (k-means on cosine
-    * assignment). Seeds are the first k vectors by id (deterministic).
-    * Each iteration is: one broadcast-assign pass over the corpus + one
-    * [[graft.functions.VectorAvg]] hash aggregate — map-side combinable, so
-    * shuffle bytes per iteration are |cells| x dims, independent of corpus
-    * size. Cells that lose all members drop out (k may shrink).
-    * `fitSample` carries the same deterministic sample-fit contract as
-    * [[fitPqCodebooks]] — seeds and every Lloyd pass prune with it.
-    *
-    * The returned centroid frame is DETACHED (materialized once, lineage
-    * severed): left lazy, every downstream consumer — each
-    * [[fitPqCodebooks]] iteration's collect, the encode pass, the serve's
-    * centroid broadcast — re-ran the whole nested Lloyd chain (its own
-    * corpus passes) as a subtree of its job; q100's fit+encode+serve paid
-    * the chain 5+ times (guide §2.4: remove recomputed subtrees). The
-    * frame is |cells| rows, so the pinned storage is centroid-budget —
-    * but OWNERSHIP TRANSFERS TO THE CALLER: a detached frame pins its
-    * blocks until driver GC (the [[Relational.detach]] storage-growth
-    * caveat), so iterative or long-lived callers that refit must
-    * [[Relational.release]] each superseded centroid frame (as
-    * [[trainBalancedCentroids]]' split loop does); one-shot query
-    * builders may rely on the bench/verify harnesses' between-query
-    * reap instead. */
+    * assignment). Seeds are the first k vectors by id (deterministic);
+    * each iteration assigns every row to its max-cosine centroid (ties to
+    * the smallest id) and moves each centroid to its members' mean. Cells
+    * that lose all members drop out (k may shrink). Fit on the driver over
+    * the bounded sample of [[hashSample]] (`256·k` rows, one job) —
+    * `fitSample` filters rows before that cap. Returns a local frame
+    * `(idCol long, vecCol array<double>)`, ids ascending. */
   def trainCentroids(corpus: DataFrame, k: Int, iterations: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      fitSample: Option[Column] = None): DataFrame = {
-    val fit = fitSample.fold(corpus)(corpus.where)
-    var cents = fit.orderBy(col(idCol)).limit(k).select(col(idCol), col(vecCol))
-    for (_ <- 0 until iterations) cents = lloydStep(fit, cents, idCol, vecCol)
-    Relational.detach(cents)
+    val (seeds, rows) = hashSample(fitSample.fold(corpus)(corpus.where), k, idCol, vecCol)
+    centroidFrame(corpus.sparkSession, lloydFit(seeds, byId(rows, k), k, iterations),
+      idCol, vecCol)
   }
-
-  /** One Lloyd iteration: broadcast-assign + [[graft.functions.VectorAvg]]
-    * hash aggregate (map-side combinable — shuffle = |cells| x dims). */
-  private def lloydStep(fit: DataFrame, cents: DataFrame,
-                        idCol: String, vecCol: String): DataFrame =
-    assignCells(fit, cents, idCol, vecCol)
-      .groupBy(col("cell_id"))
-      .agg(graft.functions.GraftFunctions.vector_avg(col(vecCol)).as(vecCol))
-      .select(col("cell_id").as(idCol), col(vecCol))
 
   /** Balance-constrained centroid training — the FIT-TIME lever against
     * Zipf-hot IVF cells, complementing [[saltedCellJoin]]'s join-time
     * salting: after a standard [[trainCentroids]] fit, repeatedly SPLIT
-    * every cell holding more than `maxCellFrac` of the fit corpus (the
+    * every cell holding more than `maxCellFrac` of the fit sample (the
     * practical balanced-k-means variant: a hot cell's centroid is
     * replaced by two seeds drawn from the cell — its two smallest-id
     * members, total determinism — and the enlarged set takes
@@ -801,12 +889,8 @@ object Similarity {
     * Lloyd refinement can re-grow a split cell past the cap, so the cap
     * is a strong pressure, not a hard guarantee — the loop re-checks and
     * re-splits each round; pair with the salted join for the residue.
-    *
-    * Scale shape: each round is one narrow assignment pass + a
-    * cell-keyed count + a 2-per-hot-cell window slice (rows entering the
-    * window: hot cells' members only) + `refineIters` Lloyd passes; the
-    * only driver state is the centroid set itself (the existing
-    * broadcast-budget contract). */
+    * The loop runs on the driver over [[trainCentroids]]' sample; split
+    * ids continue from the largest live centroid id. */
   def trainBalancedCentroids(corpus: DataFrame, k: Int, iterations: Int,
                              maxCellFrac: Double = 0.05, splitRounds: Int = 3,
                              refineIters: Int = 1,
@@ -816,62 +900,32 @@ object Similarity {
       s"maxCellFrac must be in (0, 1], got $maxCellFrac")
     require(splitRounds >= 0 && refineIters >= 0,
       "splitRounds and refineIters must be >= 0")
-    val spark = corpus.sparkSession
-    val fit = fitSample.fold(corpus)(corpus.where)
-    val n = fit.count()
-    require(n > 0, "trainBalancedCentroids: fit corpus is empty")
-    val cap = math.max(1L, (maxCellFrac * n).toLong)
-    var cents = trainCentroids(fit, k, iterations, idCol, vecCol)
+    val (seeds, rows) = hashSample(fitSample.fold(corpus)(corpus.where), k, idCol, vecCol)
+    val xs = byId(rows, k)
+    require(xs.nonEmpty, "trainBalancedCentroids: fit corpus is empty")
+    val vs = xs.map(_.vec)
+    val cap = math.max(1L, (maxCellFrac * vs.length).toLong)
+    var cents = lloydFit(seeds, xs, k, iterations)
     var round = 0
     var balanced = false
     while (round < splitRounds && !balanced) {
-      // ONE job per round for every driver scalar: hot-cell detection (a
-      // whole-partition count window), the two smallest-id seed members per
-      // hot cell (a row_number window over the SAME exchange), and the live
-      // max centroid id (1-row aggregate attached via broadcast crossJoin —
-      // the pagerank dangling-mass trick) all ride a single collect over
-      // the assignment pass. r21 paid four jobs for the same scalars:
-      // detach(assigned) + hot collect + seeds collect + maxId head.
-      val wAll = Window.partitionBy(col("cell_id"))
-      val w = Window.partitionBy(col("cell_id")).orderBy(col(idCol))
-      val seeds = assignCells(fit, cents, idCol, vecCol)
-        .withColumn("_n", count(lit(1)).over(wAll))
-        .where(col("_n") > cap)
-        .withColumn("_rn", row_number().over(w)).where(col("_rn") <= 2)
-        .select(col("cell_id").cast("long"), col("_rn"),
-          col(vecCol).cast("array<double>"))
-        .crossJoin(broadcast(cents.agg(max(col(idCol).cast("long")).as("_maxId"))))
-        .collect() // 2 x |hot| rows — centroid-budget driver state
-        .sortBy(r => (r.getLong(0), r.getInt(1)))
-      if (seeds.isEmpty) balanced = true
+      val norms = cents.vecs.map(graft.functions.NearestCentroid.selfNorm)
+      // centroid index -> member rows in id order (xs is id-sorted)
+      val members = vs.indices.groupBy(i =>
+        graft.functions.NearestCentroid.nearest(vs(i), cents.ids, cents.vecs, norms))
+      val hot = members.collect { case (c, rs) if rs.length > cap => c }.toSeq.sorted
+      if (hot.isEmpty) balanced = true
       else {
-        val hot = seeds.map(_.getLong(0)).distinct.sorted
-        val maxId = seeds(0).getLong(3)
-        val rows = seeds.zipWithIndex.map { case (r, i) =>
-          Row(maxId + 1 + i, r.getSeq[Double](2)) }
-        val fresh = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol, LongType, nullable = false),
-            org.apache.spark.sql.types.StructField(vecCol,
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType, containsNull = false),
-              nullable = false))))
-        val cold = cents.where(!col(idCol).cast("long").isin(hot.map(Long.box): _*))
-          .select(col(idCol).cast("long").as(idCol),
-            col(vecCol).cast("array<double>").as(vecCol))
-        var grown = cold.unionByName(fresh)
-        for (_ <- 0 until refineIters) grown = lloydStep(fit, grown, idCol, vecCol)
-        // detach per round: the next round's seed collect and the final
-        // consumers otherwise re-run this round's refine chain per job
-        // (trainCentroids' detach rationale, once per split round)
-        val next = Relational.detach(grown)
-        Relational.release(cents)
-        cents = next
+        val seeds = hot.flatMap(c => members(c).take(2).map(vs))
+        val maxId = cents.ids.max
+        val cold = cents.ids.indices.filterNot(hot.toSet)
+        val grown = Cents(cold.map(cents.ids).toArray ++ seeds.indices.map(maxId + 1 + _),
+          cold.map(cents.vecs).toArray ++ seeds)
+        cents = (0 until refineIters).foldLeft(grown)((c, _) => lloydPass(vs, c))
       }
       round += 1
     }
-    cents
+    centroidFrame(corpus.sparkSession, cents, idCol, vecCol)
   }
 
   /** Random-hyperplane LSH bucketing for cosine similarity (the classic
@@ -1330,77 +1384,60 @@ object Similarity {
 
   /** Fit product-quantization codebooks: split dims into `m` equal
     * subspaces and run L2 Lloyd iterations per subspace (seeds = the first
-    * `ksub` rows by id, deterministic). Returns (subspace, code, centroid)
-    * with codes dense 0..k_j-1 per subspace (empty cells drop out, so k_j
-    * may shrink below `ksub`).
-    *
-    * ALL subspaces train in lockstep from ONE corpus pass per iteration:
-    * the full current codebook set rides in a single
-    * [[graft.functions.PqEncode]] projection (narrow), each row explodes
-    * into its m (subspace, code, subvector) assignments, and one
-    * [[graft.functions.VectorAvg]] hash aggregate keyed by (subspace,
-    * code) computes every centroid update — map-side combinable, so
-    * shuffle bytes per pass are m x k x dsub (= the codebook), independent
-    * of corpus size. Total cost is `iterations` passes, NOT
-    * `m x iterations`.
-    *
-    * `fitSample` is the 100-TB contract the BPE/unigram fits already
-    * carry (Faiss standard practice: codebooks are model state fit on a
-    * bounded sample; [[pqEncode]] spends the one full-corpus pass): a
-    * deterministic predicate (e.g. `pmod(xxhash64(col(id)), 100) === 0`)
-    * that prunes EVERY fit scan — the seed slice's TakeOrdered included —
-    * while keeping the fit reproducible run-to-run. Sample-fit codebooks
-    * stay within the pinned quantization-MSE band (DedupSimilaritySpec). */
+    * `ksub` rows by id; codes are the squared-L2 argmin, ties to the
+    * smallest code). Returns a local (subspace, code, centroid) frame with
+    * codes dense 0..k_j-1 per subspace (codes that lose every member drop
+    * out and the rest renumber in order, so k_j may shrink below `ksub`).
+    * Fit on the driver over [[hashSample]]'s `256·ksub` rows; `fitSample`
+    * is an extra deterministic predicate (e.g. `pmod(xxhash64(col(id)),
+    * 100) === 0`) applied before that cap — sample-fit codebooks stay
+    * within the pinned quantization-MSE band (DedupSimilaritySpec). */
   def fitPqCodebooks(corpus: DataFrame, m: Int, ksub: Int, iterations: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      fitSample: Option[Column] = None): DataFrame = {
     require(m >= 1, s"fitPqCodebooks needs m >= 1 subspaces, got $m")
     require(ksub >= 1, s"fitPqCodebooks needs ksub >= 1 centroids, got $ksub")
     require(iterations >= 0, s"fitPqCodebooks iterations must be >= 0, got $iterations")
-    // null vectors are excluded from the fit (the aggregate-ignores-null
-    // convention); an unfiltered null would otherwise surface as an opaque
-    // NPE in the seed slice or the centroid rebuild
-    val fitCorpus = fitSample.fold(corpus)(corpus.where)
-      .where(col(vecCol).isNotNull)
-    val seedRows = fitCorpus.orderBy(col(idCol)).limit(ksub)
-      .select(col(vecCol).cast("array<double>")).collect()
-    require(seedRows.nonEmpty, "fitPqCodebooks: corpus has no non-null vectors")
-    val dims = seedRows(0).getSeq[Double](0).length
+    val (seeds, rows) = hashSample(fitSample.fold(corpus)(corpus.where), ksub, idCol, vecCol)
+    codebookFrame(corpus.sparkSession,
+      pqFit(seeds.map(_.vec), byId(rows, ksub).map(_.vec), m, ksub, iterations))
+  }
+
+  /** The PQ Lloyd loop of [[fitPqCodebooks]]: the first `ksub` seeds,
+    * then `iterations` passes over the sample `xs`. */
+  private def pqFit(seeds: Array[Array[Double]], xs: Array[Array[Double]], m: Int, ksub: Int,
+                    iterations: Int): Array[Array[Array[Double]]] = {
+    require(seeds.nonEmpty, "fitPqCodebooks: corpus has no non-null vectors")
+    val dims = seeds(0).length
     require(dims % m == 0,
       s"fitPqCodebooks: $dims dims not divisible into $m equal subspaces")
     val dsub = dims / m
-    val spark = corpus.sparkSession
-    // seeds: the first ksub rows by id, sliced per subspace (deterministic)
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      seedRows.map(_.getSeq[Double](0).slice(j * dsub, (j + 1) * dsub).toArray))
+    var books = Array.tabulate(m)(j => seeds.take(ksub).map(_.slice(j * dsub, (j + 1) * dsub)))
     for (_ <- 0 until iterations) {
-      val perSub = (0 until m).map(j => struct(
-        lit(j).as("_j"),
-        element_at(col("_codes"), j + 1).as("_code"),
-        slice(col(vecCol), j * dsub + 1, dsub).cast("array<double>").as("_sv")))
-      val next = fitCorpus
-        .select(col(vecCol), graft.functions.GraftFunctions
-          .pq_encode(col(vecCol), books.map(_.map(_.toSeq).toSeq).toSeq).as("_codes"))
-        .select(explode(array(perSub: _*)).as("_s"))
-        .groupBy(col("_s._j").as("_j"), col("_s._code").as("_code"))
-        .agg(graft.functions.GraftFunctions.vector_avg(col("_s._sv")).as("_c"))
-        .collect()
-      books = Array.tabulate(m)(j =>
-        next.filter(_.getInt(0) == j).sortBy(_.getInt(1))
-          .map(_.getSeq[Double](2).toArray))
+      val sums = books.map(b => Array.ofDim[Double](b.length, dsub))
+      val counts = books.map(b => new Array[Long](b.length))
+      xs.foreach { x =>
+        val codes = graft.functions.PqEncode.encode(x, books)
+        for (j <- 0 until m; d <- 0 until dsub) sums(j)(codes(j))(d) += x(j * dsub + d)
+        for (j <- 0 until m) counts(j)(codes(j)) += 1
+      }
+      books = Array.tabulate(m)(j => books(j).indices.filter(counts(j)(_) > 0)
+        .map(c => sums(j)(c).map(_ / counts(j)(c))).toArray)
     }
+    books
+  }
+
+  /** Codebooks as a local `(subspace, code, centroid)` frame. */
+  private def codebookFrame(spark: org.apache.spark.sql.SparkSession,
+                            books: Array[Array[Array[Double]]]): DataFrame = {
     val rows = for {
       (book, j) <- books.toSeq.zipWithIndex
       (cent, code) <- book.zipWithIndex
     } yield Row(j, code, cent.toSeq)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("subspace", IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("code", IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("centroid",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false), nullable = false))))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("subspace", IntegerType, nullable = false),
+      StructField("code", IntegerType, nullable = false),
+      StructField("centroid", ArrayType(DoubleType, containsNull = false), nullable = false))))
   }
 
   /** Driver-collect a (subspace, code, centroid) codebook frame into dense

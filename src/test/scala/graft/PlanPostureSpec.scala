@@ -325,6 +325,31 @@ class PlanPostureSpec extends SparkSuite {
     assert(!plan.contains("SinglePartition"), s"global single-partition stage:\n$plan")
   }
 
+  test("writeJsonlShards: ONE scan of docs and ONE exchange, no join back to the plan") {
+    // the write's own physical plan, captured from the command execution
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_shardplan").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.Batching.writeJsonlShards(
+        graft.meta.Tables.documents(spark, sf), "doc_id", "text", 4, 42L, out)
+      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val write = plans.toArray.map(_.toString).filter(_.contains("InsertIntoHadoopFsRelation"))
+    assert(write.length === 1, s"expected one write plan, got ${plans.size} plans")
+    val fin = write.head.split("== Initial Plan ==").head
+    assert("Exchange".r.findAllIn(fin).size === 1, s"the write must shuffle exactly once:\n$fin")
+    assert("FileScan parquet".r.findAllIn(fin).size === 1, s"docs must be scanned once:\n$fin")
+    assert(!fin.contains("Join") && !fin.contains("Window"), s"join back or window:\n$fin")
+  }
+
   test("winnowedFingerprints: one fused per-doc kernel, ZERO exchanges (q144 shape)") {
     // The whole selection (gram hash, window min, tie rule, per-position
     // dedup) is one WinnowFingerprints kernel per document — the

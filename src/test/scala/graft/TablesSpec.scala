@@ -39,6 +39,29 @@ class TablesSpec extends SparkSuite {
     assert(got == wall)
   }
 
+  test("load(events) reads a parquet-mr INT64 TIMESTAMP(NANOS) file (the nanosAsLong conf)") {
+    // The int64-nanos generation carries the TIMESTAMP(NANOS) logical type,
+    // which Spark 4 refuses to read unless the session sets
+    // spark.sql.legacy.parquet.nanosAsLong. Spark itself never writes that
+    // type, so parquet-mr's example writer produces the file here.
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val nanos = 1709296496L * 1000000000L + 789000000L // 2024-03-01T12:34:56.789 UTC
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val dir = Files.createTempDirectory("graft_tables_spec").toString
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", nanos))
+    finally writer.close()
+    val loaded = Tables.load(spark, dir, "events")
+    assert(loaded.schema("ts").dataType == TimestampNTZType)
+    assert(loaded.select("ts").head.getAs[LocalDateTime]("ts") == wall)
+  }
+
   test("load(events) passes timestamp[us] NTZ generation through unchanged") {
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampNTZType)))
