@@ -55,13 +55,9 @@ object Batching {
       it.map { r => running += v(r); Row.fromSeq(r.toSeq :+ running) }
     }
     val schema = StructType(sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    // Eagerly materialize (breaks lineage), then free the sort cache — no
-    // orphaned MEMORY_AND_DISK copies pile up across calls. Trade-off:
-    // localCheckpoint blocks are not recomputable after executor loss, so
-    // on preemptible/dynamic-allocation clusters prefer reliable
-    // checkpointing (spark.checkpoint.dir) or re-derive from source.
-    val result = sorted.sparkSession.createDataFrame(withCum, schema)
-      .localCheckpoint(eager = true)
+    // materialize before freeing the sort cache, so no MEMORY_AND_DISK copy
+    // outlives the call
+    val result = Relational.detach(sorted.sparkSession.createDataFrame(withCum, schema))
     rdd.unpersist(blocking = false)
     result
   }
@@ -76,11 +72,12 @@ object Batching {
     * (n_buckets, real_tokens, padded_tokens, waste_frac).
     *
     * Scale shape: token lengths project once; ONE distributed row-index
-    * sort ([[graft.operators.Relational.withRowIndex]] — range partition
-    * + zipWithIndex, never a single-partition window) serves EVERY
-    * candidate count, since bucket membership is `floor(idx * B / n)`;
-    * each candidate then costs one bucket-keyed aggregate over (long,
-    * long) rows. Ties order by id, so the report is engine-exact. */
+    * sort ([[graft.operators.Relational.withRowIndex]] — a sequence-id
+    * node over a range-partitioned sort, never a single-partition window)
+    * serves EVERY candidate count, since bucket membership is
+    * `floor(idx * B / n)`; each candidate then costs one bucket-keyed
+    * aggregate over (long, long) rows. Ties order by id, so the report is
+    * engine-exact. */
   def paddingEfficiency(docs: DataFrame, idCol: String, textCol: String,
                         bucketCounts: Seq[Int]): DataFrame = {
     require(bucketCounts.nonEmpty && bucketCounts.forall(_ >= 1),
@@ -105,8 +102,9 @@ object Batching {
 
   /** G1 — fixed-count micro-batch id over an explicit total order
     * (process_test_train_Images.py:49). Distributed: global row index via
-    * sort + zipWithIndex (Relational.withRowIndex), not a single-partition
-    * window; ids equal `floor((row_number()-1)/batchSize)` exactly. */
+    * a sequence-id node over a range-partitioned sort
+    * (Relational.withRowIndex), not a single-partition window; ids equal
+    * `floor((row_number()-1)/batchSize)` exactly. */
   def microBatchId(df: DataFrame, orderCols: Seq[String], batchSize: Int,
                    out: String = "batch_id"): DataFrame = {
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
@@ -214,8 +212,8 @@ object Batching {
     * against a `row_number()` formulation.
     *
     * Scale shape: the global order rides [[Relational.withRowIndex]]
-    * (range-partitioned sort + zipWithIndex — distributed, never a
-    * single-partition window); the rollup is one batch-keyed map-side-
+    * (a sequence-id node over a range-partitioned sort — distributed, never
+    * a single-partition window); the rollup is one batch-keyed map-side-
     * combined aggregation. Null lengths clamp to 0 (sort first, never
     * dropped — the [[blockPack]] convention). */
   def paddedBatchStats(df: DataFrame, idCol: String, lenCol: String,

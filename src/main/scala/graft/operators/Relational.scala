@@ -1,9 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.expressions.DistributedSequenceID
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation}
 
 /** Join / set / order operators (SURVEY §2.4, §2.9, §2.10).
   *
@@ -26,8 +27,8 @@ object Relational {
     * first: this helper then uses the RELIABLE `checkpoint()`, whose files
     * survive any executor loss at the cost of one write to the checkpoint
     * filesystem. Used by every operator here that must materialize an
-    * intermediate ([[withRowIndex]], [[graft.operators.Dedup]]'s hash
-    * tables and connected components).
+    * intermediate ([[withRowIndex]], [[Batching.prefixSum]],
+    * [[graft.operators.Dedup]]'s hash tables and connected components).
     *
     * Storage-growth caveat: a detached frame OWNS storage — localCheckpoint
     * blocks in executor memory/disk, or reliable-checkpoint files that
@@ -46,7 +47,7 @@ object Relational {
     * and deletes its reliable-checkpoint files. The frame must not be used
     * afterwards. */
   private[graft] def release(df: DataFrame): Unit =
-    org.apache.spark.sql.GraftSqlBridge.releaseDetached(df)
+    GraftSqlBridge.releaseDetached(df)
 
   /** [[detach]] with a boolean-flag row count folded into the SAME
     * materialization job — one job per fixpoint round instead of two for
@@ -72,32 +73,21 @@ object Relational {
 
   /** Attach a dense 0-based row index following `orderCols`.
     *
-    * Scalable form of `row_number() OVER (ORDER BY …)`: sort (range
-    * partitioned, stays distributed), then `zipWithIndex` — which needs only
-    * per-partition counts, not a single-partition window. Values equal the
-    * window form exactly, so oracle SQL can still use `row_number()-1`.
+    * Scalable form of `row_number() OVER (ORDER BY …)`: a range-partitioned
+    * sort (stays distributed) under Spark's sequence-id plan node
+    * (`AttachDistributedSequence`, the node behind pandas-on-Spark's default
+    * index), which numbers rows from per-partition counts instead of a
+    * single-partition window. Under a total order the values equal
+    * `row_number()-1` exactly, so oracle SQL can still use that form.
     *
-    * Returns a lineage-severed frame — see [[detach]] for the executor-loss
+    * Returns a lineage-severed frame, so indices stay put across re-collects
+    * even when sort keys tie — see [[detach]] for the executor-loss
     * durability contract (set a checkpoint dir for the reliable mode).
     */
   def withRowIndex(df: DataFrame, orderCols: Seq[String],
-                   out: String = "idx"): DataFrame = {
-    val sorted = df.orderBy(orderCols.map(col): _*)
-    val schema = StructType(sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    // zipWithIndex launches TWO jobs (per-partition counts, then the data
-    // pass); persist the sorted data between them — RangePartitioner
-    // sampling is not guaranteed deterministic across recomputes, so an
-    // unguarded recompute could hand the second job different partition
-    // boundaries than the counts came from. Same guard as
-    // [[Batching.prefixSum]]; the checkpoint breaks lineage so the cache
-    // can be released before returning.
-    val rdd = sorted.rdd
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val indexed = rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    val result = detach(sorted.sparkSession.createDataFrame(indexed, schema))
-    rdd.unpersist(blocking = false)
-    result
-  }
+                   out: String = "idx"): DataFrame =
+    detach(df.orderBy(orderCols.map(col): _*).select(col("*"),
+      GraftSqlBridge.column(DistributedSequenceID()).as(out)))
 
   /** J1 — positional equi-join: index both sides by their own order, join on
     * the index (model_architecture.py:66-73 `__getitem__` alignment). */

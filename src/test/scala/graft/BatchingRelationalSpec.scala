@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Batching, Relational}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -41,6 +42,22 @@ class BatchingRelationalSpec extends SparkSuite {
       .orderBy("n").select("cum").as[Long].collect()
     val expected = (0L until 500L).map(n => (n % 13) + 1).scanLeft(0L)(_ + _).tail
     assert(got === expected.toArray)
+  }
+
+  test("prefixSum materializes through detach: reliable checkpoint files once a dir is set") {
+    val dir = Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    try {
+      val df = spark.range(0, 500).toDF("n").repartition(7)
+        .withColumn("v", (col("n") % 13) + 1)
+      val got = Batching.prefixSum(df, Seq("n"), "v", "cum")
+        .orderBy("n").select("cum").as[Long].collect()
+      val expected = (0L until 500L).map(n => (n % 13) + 1).scanLeft(0L)(_ + _).tail
+      assert(got === expected.toArray)
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+      assert(files(dir).nonEmpty, "no reliable checkpoint files were written")
+    } finally spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
   }
 
   test("blockPack: docs straddle block boundaries with exact overlap counts") {
@@ -165,16 +182,41 @@ class BatchingRelationalSpec extends SparkSuite {
     val out = Relational.withRowIndex(df, Seq("k")).orderBy("idx")
       .as[(Long, Long)].collect()
     assert(out === Array((10L, 0L), (20L, 1L), (30L, 2L)))
+    // 20k rows from 7 input partitions, permuted unique keys, an array
+    // column; partition coalescing off so the sort hands the sequence node
+    // several partitions and the cross-partition offsets are exercised
+    val wide = spark.range(0, 20000, 1, 7)
+      .select(((col("id") * 7919) % 20000).as("k"),
+        array_repeat(col("id").cast("float"), 16).as("vec"))
+    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.get(coalesceConf)
+    spark.conf.set(coalesceConf, "false")
+    try {
+      val indexed = Relational.withRowIndex(wide, Seq("k"))
+      assert(indexed.rdd.getNumPartitions > 1)
+      val got = indexed.orderBy("k").select("k", "idx", "vec")
+        .as[(Long, Long, Seq[Float])].collect()
+      val expected = wide
+        .withColumn("rn", (row_number().over(Window.orderBy("k")) - 1).cast("long"))
+        .orderBy("k").select("k", "rn", "vec")
+        .as[(Long, Long, Seq[Float])].collect()
+      assert(got.length === 20000)
+      assert(got === expected)
+    } finally spark.conf.set(coalesceConf, before)
   }
 
   test("withRowIndex: stable across re-collects, dense under ties (persist guard)") {
     // Duplicate sort keys over many input partitions: if the sorted lineage
-    // were recomputed between zipWithIndex's two jobs (or between collects),
-    // tied rows could swap indices. The checkpoint pins one assignment.
+    // were recomputed between the sequence node's two jobs (or between
+    // collects), tied rows could swap indices. The checkpoint pins one
+    // assignment.
     val df = spark.range(0, 400).toDF("n")
       .repartition(13)
       .withColumn("k", col("n") % 5) // heavy ties on the sort key
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     val idx = Relational.withRowIndex(df, Seq("k"))
+    // only the handback's own blocks stay persisted
+    assert(spark.sparkContext.getPersistentRDDs.size <= persisted + 1)
     val first = idx.orderBy("n").select("n", "idx").as[(Long, Long)].collect()
     val second = idx.orderBy("n").select("n", "idx").as[(Long, Long)].collect()
     assert(first === second)

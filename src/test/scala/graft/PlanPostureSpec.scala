@@ -350,6 +350,29 @@ class PlanPostureSpec extends SparkSuite {
     assert(!fin.contains("Join") && !fin.contains("Window"), s"join back or window:\n$fin")
   }
 
+  test("withRowIndex: ONE query execution through the sequence-id node, no RDD round trip") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        runs.add(f -> qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val df = spark.range(0, 2000, 1, 7)
+      .select(((col("id") * 7) % 2000).as("k"), array_repeat(col("id").cast("float"), 8).as("vec"))
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.Relational.withRowIndex(df, Seq("k"))
+      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val execs = runs.toArray(Array.empty[(String, String)])
+    assert(execs.length === 1, s"expected one query execution, got ${execs.map(_._1).mkString(", ")}")
+    val plan = execs.head._2
+    assert(plan.contains("AttachDistributedSequence"), s"no sequence-id node:\n$plan")
+    assert(!plan.contains("Scan ExistingRDD"), s"an RDD round trip:\n$plan")
+  }
+
   test("winnowedFingerprints: one fused per-doc kernel, ZERO exchanges (q144 shape)") {
     // The whole selection (gram hash, window min, tie rule, per-position
     // dedup) is one WinnowFingerprints kernel per document — the
