@@ -449,9 +449,10 @@ private[graft] object TokenQueries {
         |ORDER BY n DESC, pair LIMIT 50""".stripMargin)),
 
     // Full BPE merge-table training, 20 rounds — the Sennrich et al.
-    // iterative fit (argmax pair -> greedy merge, repeat). Driver-loop
-    // fit like the Lloyd queries: rows-only check; the merge recurrence
-    // is pinned against the paper's worked example in TextAnalysisSpec.
+    // iterative fit (argmax pair -> greedy merge, repeat), run on the
+    // driver over one collected word-type table: rows-only check; the
+    // merge recurrence is pinned against the paper's worked example in
+    // TextAnalysisSpec.
     Q("q136_bpe_merges", (s, dir) => {
       TextAnalysis.trainBpeMerges(Tables.documents(s, dir), "text", nMerges = 20)
         .orderBy("rank")
@@ -958,10 +959,10 @@ private[graft] object TokenQueries {
     // Unigram-LM tokenizer TRAINING (Kudo 2018, the SentencePiece fit) —
     // the probabilistic sibling of q136's BPE merges: over-complete
     // substring seed, EM on the word-type table, prune to vocabSize,
-    // final re-fit. Iterative driver-loop fit like q136/Lloyd -> rows-
-    // only check; the E-step is pinned against brute-force segmentation
-    // enumeration and the EM monotone-likelihood guarantee in
-    // TextAnalysisSpec.
+    // final re-fit — on the driver over one collected word-type table,
+    // like q136 -> rows-only check; the E-step is pinned against
+    // brute-force segmentation enumeration and the EM monotone-likelihood
+    // guarantee in TextAnalysisSpec.
     Q("q196_unigram_lm", (s, dir) => {
       TextAnalysis.trainUnigramLm(Tables.documents(s, dir), "text",
           vocabSize = 120, maxPieceLen = 4, emIters = 2)

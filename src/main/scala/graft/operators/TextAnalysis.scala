@@ -1063,6 +1063,31 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("pair").asc).limit(topK)
   }
 
+  /** Word types a tokenizer fit may hold on the driver. A collected
+    * `(word, freq)` entry of an 8-character word holds about 80 bytes of
+    * driver heap (String, boxed Long, tuple; 78 B measured over a full
+    * 2^20-type table), so a full table of short words is under 100 MB,
+    * plus the collect's decode buffers while it runs. */
+  private[graft] val MaxFitWordTypes: Int = 1 << 20
+
+  /** The fit corpus's word-type table `(word, freq)`: ONE bounded collect
+    * of `fitSample`'s docs, sorted by word so that every driver-side sum
+    * over it runs in one fixed order whatever the partitioning. A corpus
+    * with more than [[MaxFitWordTypes]] word types fails loudly: fit it on
+    * a deterministic `fitSample`. */
+  private[graft] def wordTypes(docs: DataFrame, textCol: String,
+                               fitSample: Option[Column], fit: String): Array[(String, Long)] = {
+    import docs.sparkSession.implicits._
+    val types = fitSample.fold(docs)(docs.where)
+      .select(explode(wordTokens(col(textCol))).as("_w"))
+      .groupBy("_w").count()
+      .limit(MaxFitWordTypes + 1).as[(String, Long)].collect()
+    require(types.length <= MaxFitWordTypes,
+      s"$fit: the fit corpus holds more than $MaxFitWordTypes word types; pass a " +
+        "deterministic fitSample predicate to fit the tokenizer on a bounded sample")
+    types.sortBy(_._1)
+  }
+
   /** BPE merge-table training (Sennrich et al. 2016 alg. 1): start from
     * character symbols, repeat `nMerges` times — count adjacent symbol
     * pairs over the frequency-weighted vocabulary, merge the most frequent
@@ -1070,12 +1095,10 @@ object TextAnalysis {
     * greedily left-to-right in every word. Returns the merge table
     * `(rank, left, right, merged, n)` — the artifact a BPE tokenizer IS.
     *
-    * Like the Lloyd fits ([[graft.operators.Similarity.trainCentroids]])
-    * this is an ITERATIVE driver loop: each round runs one vocabulary-
-    * sized aggregate and collects ONE row (the argmax pair). The corpus
-    * is touched exactly once (the word-frequency explode); all `nMerges`
-    * rounds run over the detached vocab table — the rounds cost
-    * |vocabulary|, not corpus. Stops early if no pair remains.
+    * The corpus is read ONCE, by [[wordTypes]]' bounded collect; every
+    * round then runs on the driver over that table, as in the paper's
+    * algorithm — the rounds cost |vocabulary|, not corpus, and launch no
+    * Spark job. Stops early if no pair remains.
     *
     * At 100 TB even |vocabulary| is heavy-tailed-huge, and tokenizer
     * training does not need the whole corpus: standard practice (the same
@@ -1085,143 +1108,38 @@ object TextAnalysis {
     * stage, [[bpeEncodeStats]]) is to fit on a deterministic sample.
     * `fitSample` is that contract: a deterministic predicate over the
     * docs frame — e.g. `pmod(xxhash64(col("doc_id")), 100) < 5` for a
-    * reproducible 5% — restricting ONLY what the fit sees. Pass None for
-    * exact-corpus parity (the q136 oracle shape); sampled-vs-full merge
-    * agreement on the test corpus is pinned in TextAnalysisSpec.
-    *
-    * DETACH CADENCE: the merge fold is a NARROW projection, so rounds do
-    * not need a lineage cut each — the loop detaches every
-    * `detachCadence` rounds (and keeps at most one detached generation
-    * alive). Between cuts, round r's aggregate recomputes up to
-    * `detachCadence - 1` prior folds — vocabulary-sized narrow CPU, no
-    * extra shuffles — in exchange for one fewer materialization JOB per
-    * round, which is the dominant cost of small fits (the q216 class:
-    * a 5-merge fit is ~13 tiny driver-loop jobs, none over 200 ms).
-    * The cadence bounds both lineage depth and recompute at scale;
-    * 8 balances them for production merge counts (32k rounds = 4k cuts,
-    * each amortizing 8 rounds of fold CPU).
-    *
-    * BATCHED ARGMAX (`argmaxBatch`, r22): each aggregate collects the top
-    * `argmaxBatch` pairs instead of one, and accepts the longest PREFIX
-    * that is PROVABLY the next merges of the sequential recurrence —
-    * cutting driver-loop rounds (one vocab aggregate + collect each) by
-    * ~40% on natural text (measured 20 -> 12 rounds on the test corpus)
-    * for the same merge table. The proof
-    * obligations, encoded in the acceptance scan below (each derived from
-    * "a new pair created by merging (a, b) corresponds 1:1 to a pre-merge
-    * occurrence of a pair touching a or b, so post-merge counts are
-    * bounded by pre-merge counts of touching pairs"):
-    *  1. p_1 is the true argmax (always accepted).
-    *  2. p_i (i > 1) must share NO symbol with earlier accepted pairs —
-    *     then its own count is untouched by their merges and it cannot
-    *     have been consumed.
-    *  3. Every fetched non-accepted pair touching an accepted symbol must
-    *     have count STRICTLY below p_i's: such pairs bound both their own
-    *     post-merge counts and the counts of any NEW pair the accepted
-    *     merges create; strictness kills the tie case where a new pair
-    *     (whose merged-symbol name can sort arbitrarily) ties p_i and
-    *     could win the (a, b)-ascending tie-break.
-    *  4. When the fetched list was truncated at `argmaxBatch` rows, p_i
-    *     must STRICTLY beat the last fetched count (unseen pairs are
-    *     bounded by it, and an unseen touching pair at exactly that count
-    *     is hazard 3 again).
-    *  5. An accepted self-pair (a, a) CLOSES the batch: its own merge
-    *     creates pairs like (aa, a) whose parent occurrence is the
-    *     accepted pair itself, so their post-counts are bounded only by
-    *     ITS count — nothing later in the batch can be proven.
-    *  Ties between accepted DISJOINT pairs are safe: the fetch ordering
-    *  (n desc, a asc, b asc) IS the recurrence's tie-break, and a
-    *  disjoint pair's count is unchanged. The first pair failing any
-    *  check stops the scan (its own post-merge count is unknown, so no
-    *  later pair can be proven past it). `argmaxBatch = 1` is exactly
-    *  the r21 sequential loop; equality of the two paths on real text and
-    *  on adversarial overlap fixtures is pinned in TextAnalysisSpec. */
+    * reproducible 5% — restricting ONLY what the fit sees. A fit corpus
+    * above [[MaxFitWordTypes]] word types fails and asks for one. Pass
+    * None for exact-corpus parity (the q136 oracle shape); sampled-vs-full
+    * merge agreement on the test corpus is pinned in TextAnalysisSpec. */
   def trainBpeMerges(docs: DataFrame, textCol: String, nMerges: Int,
-                     fitSample: Option[Column] = None,
-                     detachCadence: Int = 8,
-                     argmaxBatch: Int = 8): DataFrame = {
+                     fitSample: Option[Column] = None): DataFrame = {
     require(nMerges >= 1, s"trainBpeMerges needs nMerges >= 1, got $nMerges")
-    require(detachCadence >= 1,
-      s"trainBpeMerges needs detachCadence >= 1, got $detachCadence")
-    require(argmaxBatch >= 1,
-      s"trainBpeMerges needs argmaxBatch >= 1, got $argmaxBatch")
-    val spark = docs.sparkSession
-    var root = Relational.detach(
-      fitSample.fold(docs)(docs.where)
-        .select(explode(wordTokens(col(textCol))).as("_w"))
-        .groupBy("_w").agg(count(lit(1)).as("_f"))
-        .select(col("_f"), split(col("_w"), "").as("_s")))
-    var vocab = root // root + <= detachCadence-1 narrow folds on top
-    var foldsSinceDetach = 0
+    var words = wordTypes(docs, textCol, fitSample, "trainBpeMerges")
+      .map { case (w, f) => (w.map(_.toString).toVector, f) }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var done = false
     while (merges.size < nMerges && !done) {
-      val want = math.min(argmaxBatch, nMerges - merges.size)
-      val top = vocab.select(col("_f"), explode(expr(
-          "IF(size(_s) < 2, array(), transform(sequence(0, size(_s) - 2), " +
-            "i -> struct(element_at(_s, i + 1) AS a, element_at(_s, i + 2) AS b)))")).as("p"))
-        .groupBy(col("p.a"), col("p.b")).agg(sum("_f").as("n"))
-        .orderBy(col("n").desc, col("a").asc, col("b").asc).limit(want)
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) done = true
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, f) <- words; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        pairs(p) = pairs.getOrElse(p, 0L) + f
+      }
+      if (pairs.isEmpty) done = true
       else {
-        // the batched-argmax acceptance scan (proof obligations in the
-        // scaladoc above); truncated fetch => unseen pairs bounded by the
-        // last fetched count
-        val truncated = top.length == want
-        val tailN = top.last._3
-        val acceptedSyms = scala.collection.mutable.Set.empty[String]
-        var closed = false
-        var i = 0
-        while (!closed && i < top.length) {
-          val (a, b, n) = top(i)
-          val ok = i == 0 || {
-            val disjoint = !acceptedSyms(a) && !acceptedSyms(b)
-            lazy val dominatesTouched = top.indices.forall { j =>
-              j <= i || top(j)._3 < n ||
-                (!acceptedSyms(top(j)._1) && !acceptedSyms(top(j)._2))
-            }
-            lazy val dominatesUnseen = !truncated || n > tailN
-            disjoint && dominatesTouched && dominatesUnseen
-          }
-          if (!ok) closed = true
-          else {
-            // The merge fold below splices both symbols into SQL text.
-            // Today wordTokens = [A-Za-z0-9]+ can never emit a quote, but a
-            // future tokenizer swap (byte-level BPE over raw text) would
-            // silently turn this into SQL injection — fail loudly instead.
-            Seq(a, b).foreach(s => require(s.matches("[A-Za-z0-9]+"),
-              s"trainBpeMerges symbol '$s' outside [A-Za-z0-9]+ — the merge fold " +
-                "splices symbols into SQL text and is only safe for this alphabet"))
-            val ab = a + b
-            merges += ((merges.size + 1, a, b, ab, n))
-            // greedy left-to-right merge: fold symbols, collapsing (a, b)
-            // runs non-overlappingly ("aaa" under (a,a) -> [aa, a])
-            val mergedExpr = expr(
-              s"aggregate(_s, cast(array() as array<string>), (acc, x) -> " +
-                s"IF(size(acc) > 0 AND element_at(acc, -1) = '$a' AND x = '$b', " +
-                s"concat(slice(acc, 1, size(acc) - 1), array('$ab')), " +
-                s"concat(acc, array(x))))")
-            vocab = vocab.select(col("_f"), mergedExpr.as("_s"))
-            foldsSinceDetach += 1
-            if (foldsSinceDetach >= detachCadence) {
-              val next = Relational.detach(vocab)
-              Relational.release(root)
-              root = next
-              vocab = next
-              foldsSinceDetach = 0
-            }
-            acceptedSyms += a
-            acceptedSyms += b
-            if (a == b) closed = true // obligation 5: self-pair ends the batch
-            i += 1
-          }
+        val ((a, b), n) = pairs.minBy { case ((a, b), n) => (-n, a, b) }
+        val ab = a + b
+        merges += ((merges.size + 1, a, b, ab, n))
+        // greedy left-to-right merge, collapsing (a, b) runs
+        // non-overlappingly ("aaa" under (a,a) -> [aa, a])
+        words = words.map { case (syms, f) =>
+          (syms.foldLeft(Vector.empty[String]) { (acc, x) =>
+            if (acc.nonEmpty && acc.last == a && x == b) acc.init :+ ab else acc :+ x
+          }, f)
         }
       }
     }
-    Relational.release(root)
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     merges.toSeq.toDF("rank", "left", "right", "merged", "n")
   }
 
@@ -1839,73 +1757,52 @@ object TextAnalysis {
     else b + math.log1p(math.exp(a - b))
 
   /** One EM E-step of the unigram LM over the word-TYPE table
-    * `(_w string, _f long)`: per word type, forward-backward over the
+    * `(word, freq)`: per word type, forward-backward over the
     * segmentation lattice (arcs = vocab pieces, in log space) yields
     * each piece's posterior expected count, frequency-weighted. Returns
-    * (expected counts, corpus log-likelihood Σ f·log Z).
-    *
-    * Scale shape: the imperative DP runs on the word-TYPE table —
-    * vocabulary-sized (Heaps' law ~√corpus), never the corpus — with the
-    * vocab broadcast; counts partial-aggregate map-side (each task also
-    * pre-combines per word) and the collect is |vocab|-bounded, the same
-    * contract as the Lloyd/codebook fits. Words the vocab cannot segment
-    * (impossible while all single chars stay in the vocab) contribute
-    * nothing rather than -inf. */
-  private[graft] def unigramEmStep(wordFreq: DataFrame, vocab: Map[String, Double],
+    * (expected counts, corpus log-likelihood Σ f·log Z). Runs on the
+    * driver over the collected table ([[wordTypes]]), summing in its
+    * order. Words the vocab cannot segment (impossible while all single
+    * chars stay in the vocab) contribute nothing rather than -inf. */
+  private[graft] def unigramEmStep(wordFreq: Array[(String, Long)], vocab: Map[String, Double],
                                    maxPieceLen: Int): (Map[String, Double], Double) = {
-    val spark = wordFreq.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(vocab)
-    val contrib = wordFreq.as[(String, Long)].mapPartitions { it =>
-      val v = bc.value
-      val neg = Double.NegativeInfinity
-      it.flatMap { case (w, f) =>
-        val n = w.length
-        val alpha = Array.fill(n + 1)(neg)
-        alpha(0) = 0.0
-        for (i <- 1 to n; l <- 1 to math.min(maxPieceLen, i)) {
-          val j = i - l
-          if (alpha(j) != neg) v.get(w.substring(j, i)).foreach { lp =>
-            alpha(i) = logAdd(alpha(i), alpha(j) + lp)
-          }
-        }
-        val z = alpha(n)
-        if (z == neg) Iterator.empty
-        else {
-          val beta = Array.fill(n + 1)(neg)
-          beta(n) = 0.0
-          for (j <- (n - 1) to 0 by -1; l <- 1 to math.min(maxPieceLen, n - j)) {
-            val i = j + l
-            if (beta(i) != neg) v.get(w.substring(j, i)).foreach { lp =>
-              beta(j) = logAdd(beta(j), lp + beta(i))
-            }
-          }
-          val out = scala.collection.mutable.HashMap.empty[String, Double]
-          for (j <- 0 until n; l <- 1 to math.min(maxPieceLen, n - j)) {
-            val i = j + l
-            if (alpha(j) != neg && beta(i) != neg) {
-              val piece = w.substring(j, i)
-              v.get(piece).foreach { lp =>
-                val post = math.exp(alpha(j) + lp + beta(i) - z)
-                if (post > 0) out(piece) = out.getOrElse(piece, 0.0) + f * post
-              }
-            }
-          }
-          // "" is the log-likelihood sentinel row: never a real piece
-          // (wordTokens emits non-empty [A-Za-z0-9]+ only)
-          out.iterator.map { case (p, c) => (p, c) } ++ Iterator(("", f * z))
+    val neg = Double.NegativeInfinity
+    val counts = scala.collection.mutable.HashMap.empty[String, Double]
+    var ll = 0.0
+    for ((w, f) <- wordFreq) {
+      val n = w.length
+      val alpha = Array.fill(n + 1)(neg)
+      alpha(0) = 0.0
+      for (i <- 1 to n; l <- 1 to math.min(maxPieceLen, i)) {
+        val j = i - l
+        if (alpha(j) != neg) vocab.get(w.substring(j, i)).foreach { lp =>
+          alpha(i) = logAdd(alpha(i), alpha(j) + lp)
         }
       }
-    }.toDF("piece", "c")
-      .groupBy("piece").agg(sum("c").as("c"))
-      .collect()
-    // the E-step job is complete — release the vocab broadcast now
-    // instead of leaking one block per EM round (same hygiene as
-    // Relational.release for detached frames)
-    bc.destroy()
-    val counts = contrib.iterator
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    (counts - "", counts.getOrElse("", 0.0))
+      val z = alpha(n)
+      if (z != neg) {
+        val beta = Array.fill(n + 1)(neg)
+        beta(n) = 0.0
+        for (j <- (n - 1) to 0 by -1; l <- 1 to math.min(maxPieceLen, n - j)) {
+          val i = j + l
+          if (beta(i) != neg) vocab.get(w.substring(j, i)).foreach { lp =>
+            beta(j) = logAdd(beta(j), lp + beta(i))
+          }
+        }
+        for (j <- 0 until n; l <- 1 to math.min(maxPieceLen, n - j)) {
+          val i = j + l
+          if (alpha(j) != neg && beta(i) != neg) {
+            val piece = w.substring(j, i)
+            vocab.get(piece).foreach { lp =>
+              val post = math.exp(alpha(j) + lp + beta(i) - z)
+              if (post > 0) counts(piece) = counts.getOrElse(piece, 0.0) + f * post
+            }
+          }
+        }
+        ll += f * z
+      }
+    }
+    (counts.toMap, ll)
   }
 
   /** M-step: renormalize expected counts into log-probabilities. Dead
@@ -1934,10 +1831,11 @@ object TextAnalysis {
     * Deviation from the paper, stated: pruning is by expected count, not
     * by loss-if-removed — the standard simplification; on natural text
     * the two orders agree except deep in the tail. Like
-    * [[trainBpeMerges]] this is an iterative fit (a driver loop of
-    * bounded-size E-steps), the corpus is touched exactly once (the
-    * word-frequency aggregate), and `fitSample` carries the same
-    * deterministic sample-fit contract for 100 TB corpora. EM's
+    * [[trainBpeMerges]], the corpus is read ONCE, by [[wordTypes]]'
+    * bounded collect, and the seed inventory and every EM round run on
+    * the driver over that table, as SentencePiece runs them; a fit corpus
+    * above [[MaxFitWordTypes]] word types fails, and `fitSample` carries
+    * the same deterministic sample-fit contract for 100 TB corpora. EM's
     * monotone-likelihood guarantee is pinned in TextAnalysisSpec against
     * a brute-force all-segmentations reference. */
   def trainUnigramLm(docs: DataFrame, textCol: String, vocabSize: Int,
@@ -1946,27 +1844,18 @@ object TextAnalysis {
     require(vocabSize >= 2, s"trainUnigramLm needs vocabSize >= 2, got $vocabSize")
     require(maxPieceLen >= 2, s"trainUnigramLm needs maxPieceLen >= 2, got $maxPieceLen")
     require(emIters >= 1 && seedFactor >= 1, "emIters and seedFactor must be >= 1")
-    val spark = docs.sparkSession
-    val wf = Relational.detach(
-      fitSample.fold(docs)(docs.where)
-        .select(explode(wordTokens(col(textCol))).as("_w"))
-        .groupBy("_w").agg(count(lit(1)).as("_f")))
-    // seed inventory: frequency-weighted substring counts, one
-    // vocabulary-sized explode (bounded: |word| * maxPieceLen pieces per
-    // word TYPE)
-    // detached: the singles and multis collects below would otherwise
-    // each re-run the substring explode + aggregate
-    val sub = Relational.detach(wf.select(col("_f"), explode(expr(
-        s"flatten(transform(sequence(1, length(_w)), s -> " +
-          s"transform(sequence(s, least(length(_w), s + ${maxPieceLen - 1})), " +
-          s"e -> substring(_w, s, e - s + 1))))")).as("piece"))
-      .groupBy("piece").agg(sum("_f").as("n")))
-    val singles = sub.where(length(col("piece")) === 1).collect()
-      .map(r => r.getString(0) -> r.getLong(1).toDouble)
-    val multis = sub.where(length(col("piece")) > 1)
-      .orderBy(col("n").desc, col("piece").asc).limit(vocabSize * seedFactor)
-      .collect().map(r => r.getString(0) -> r.getLong(1).toDouble)
-    Relational.release(sub)
+    val wf = wordTypes(docs, textCol, fitSample, "trainUnigramLm")
+    // seed inventory: frequency-weighted counts of every substring up to
+    // maxPieceLen (|word| * maxPieceLen pieces per word TYPE)
+    val sub = scala.collection.mutable.HashMap.empty[String, Long]
+    for ((w, f) <- wf; j <- 0 until w.length; l <- 1 to math.min(maxPieceLen, w.length - j)) {
+      val piece = w.substring(j, j + l)
+      sub(piece) = sub.getOrElse(piece, 0L) + f
+    }
+    val singles = sub.toSeq.filter(_._1.length == 1).map { case (p, n) => p -> n.toDouble }
+    val multis = sub.toSeq.filter(_._1.length > 1)
+      .sortBy { case (p, n) => (-n, p) }.take(vocabSize * seedFactor)
+      .map { case (p, n) => p -> n.toDouble }
     require(singles.length < vocabSize,
       s"vocabSize $vocabSize must exceed the ${singles.length} distinct chars")
     val seedTotal = (singles ++ multis).map(_._2).sum
@@ -1979,9 +1868,10 @@ object TextAnalysis {
       counts = c
     }
     // prune to vocabSize: chars mandatory, multis by expected count
-    // ranking keys round to the 4-dp output grid FIRST: raw expected
-    // counts are partition-order-dependent double sums, and a near-tie
-    // could otherwise permute the kept set / rank order across runs
+    // ranking keys round to the 4-dp grid the exp_count column prints
+    // FIRST: multis whose printed counts tie then rank by piece, so the
+    // kept set and rank order follow from the printed table, not from a
+    // last-bit difference in how the doubles were summed
     def grid(c: Double): Double = math.rint(c * 1e4) / 1e4
     val charPieces = vocab.keysIterator.filter(_.length == 1).toSeq
     val keptMultis = vocab.keysIterator.filter(_.length > 1).toSeq
@@ -1991,8 +1881,7 @@ object TextAnalysis {
     // final re-fit on the pruned inventory
     val (cFinal, _) = unigramEmStep(wf, vocab, maxPieceLen)
     vocab = unigramMStep(cFinal, vocab.keys)
-    Relational.release(wf)
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     vocab.toSeq
       .map { case (p, lp) => (p, lp, grid(cFinal.getOrElse(p, 0.0))) }
       .sortBy { case (p, _, c) => (-c, p) }

@@ -57,7 +57,10 @@ class BatchingRelationalSpec extends SparkSuite {
       def files(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
       assert(files(dir).nonEmpty, "no reliable checkpoint files were written")
-    } finally spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
+    } finally {
+      spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("blockPack: docs straddle block boundaries with exact overlap counts") {
@@ -268,7 +271,10 @@ class BatchingRelationalSpec extends SparkSuite {
         def files(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
         assert(files(dir).nonEmpty, "no reliable checkpoint files were written")
-      } finally spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
+      } finally {
+        spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
+        org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

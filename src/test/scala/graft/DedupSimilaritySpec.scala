@@ -550,6 +550,7 @@ class DedupSimilaritySpec extends SparkSuite {
       assert(files(dir).nonEmpty, "no reliable checkpoint files were written")
     } finally {
       spark.sparkContext.setCheckpointDir(null) // restore local-checkpoint mode
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
 

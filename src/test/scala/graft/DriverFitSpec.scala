@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{pq_encode, vector_avg}
 import graft.meta.Tables
-import graft.operators.Similarity
+import graft.operators.{Similarity, TextAnalysis}
 
 /** The IVF-PQ quantizer fits run on the driver over one bounded sample:
   * Lloyd reads the first `256·k` non-null rows in `(xxhash64(id), id)`
   * order, seeded by the corpus's first `k` rows by id. Pins that the
   * driver fit is the distributed Lloyd loop it replaced (on a corpus
   * within the cap), that it does not depend on partitioning, that the cap
-  * is exact, and that a fit is ONE Spark job at any iteration count. */
+  * is exact, and that a fit is ONE Spark job at any iteration count.
+  * The tokenizer fits likewise collect one bounded word-type table and
+  * fail loudly above its cap. */
 class DriverFitSpec extends SparkSuite {
   import spark.implicits._
 
@@ -198,36 +200,65 @@ class DriverFitSpec extends SparkSuite {
     // nCells 1 caps the centroid sample at 256 of the 500 rows while
     // ksub 4 fits codebooks on all of them: the two fits share one collect
     for ((nCells, ksub) <- Seq((1, 4), (4, 8))) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_driverfit").toString
-      val idx = Similarity.buildIvfPqIndex(emb, dir, nCells, m = 4, ksub, iterations = 2)
-      val cents = Similarity.trainCentroids(emb, nCells, 2)
-      assert(centroids(idx.centroids).toSeq === centroids(cents).toSeq)
-      assert(books(idx.codebooks).map(_.map(_.toSeq).toSeq).toSeq ===
-        books(Similarity.fitIvfPqCodebooks(emb, cents, 4, ksub, 2))
-          .map(_.map(_.toSeq).toSeq).toSeq)
+      val dir = java.nio.file.Files.createTempDirectory("graft_driverfit").toFile
+      try {
+        val idx = Similarity.buildIvfPqIndex(emb, dir.getPath, nCells, m = 4, ksub, iterations = 2)
+        val cents = Similarity.trainCentroids(emb, nCells, 2)
+        assert(centroids(idx.centroids).toSeq === centroids(cents).toSeq)
+        assert(books(idx.codebooks).map(_.map(_.toSeq).toSeq).toSeq ===
+          books(Similarity.fitIvfPqCodebooks(emb, cents, 4, ksub, 2))
+            .map(_.map(_.toSeq).toSeq).toSeq)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
 
   // --- (d) one job per fit ---
 
-  test("trainCentroids and fitPqCodebooks run one Spark job at any iteration count") {
+  /** Spark jobs launched while building and collecting `body`. */
+  private def jobsOf(body: => DataFrame): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    def jobsOf(body: => DataFrame): Int = {
-      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
-      jobs.set(0)
+    org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
       body.collect()
       org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
       jobs.get
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("trainCentroids and fitPqCodebooks run one Spark job at any iteration count") {
     val corpus = Tables.embeddings(spark, sf)
-    spark.sparkContext.addSparkListener(listener)
-    try for (it <- Seq(1, 5)) {
+    for (it <- Seq(1, 5)) {
       assert(jobsOf(Similarity.trainCentroids(corpus, 4, it)) === 1, s"trainCentroids at $it")
       assert(jobsOf(Similarity.fitPqCodebooks(corpus, 8, 16, it)) === 1, s"fitPqCodebooks at $it")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  // --- (e) the tokenizer fits: one collect of the word-type table ---
+
+  test("trainBpeMerges and trainUnigramLm run at most 3 Spark jobs") {
+    val docs = Tables.documents(spark, sf)
+    val bpe = jobsOf(TextAnalysis.trainBpeMerges(docs, "text", nMerges = 20))
+    assert(bpe <= 3, s"trainBpeMerges ran $bpe jobs")
+    val unigram = jobsOf(TextAnalysis.trainUnigramLm(docs, "text", vocabSize = 120))
+    assert(unigram <= 3, s"trainUnigramLm ran $unigram jobs")
+  }
+
+  test("a tokenizer fit over the word-type cap fails and names fitSample") {
+    val docs = spark.range(TextAnalysis.MaxFitWordTypes + 1L)
+      .withColumn("text", concat(lit("w"), col("id")))
+    for (fit <- Seq[() => DataFrame](
+        () => TextAnalysis.trainBpeMerges(docs, "text", nMerges = 1),
+        () => TextAnalysis.trainUnigramLm(docs, "text", vocabSize = 40))) {
+      val e = intercept[IllegalArgumentException](fit())
+      assert(e.getMessage.contains("fitSample"), e.getMessage)
+    }
+    // a deterministic sample under the cap fits
+    assert(TextAnalysis.trainBpeMerges(docs, "text", nMerges = 1,
+      fitSample = Some(col("id") < 100)).count() === 1)
   }
 }

@@ -257,6 +257,11 @@ class TextAnalysisSpec extends SparkSuite {
     assert(all === Array((1, "a", "b", "ab", 2L)))
     intercept[IllegalArgumentException](
       TextAnalysis.trainBpeMerges(docs, "text", nMerges = 0))
+    // one doc per word: the table does not depend on partitioning
+    val perWord = docs.select(explode(split(col("text"), " ")).as("text"))
+    for (parts <- Seq(1, 7))
+      assert(TextAnalysis.trainBpeMerges(perWord.repartition(parts), "text", nMerges = 3)
+        .orderBy("rank").as[(Int, String, String, String, Long)].collect() === got)
   }
 
   test("q216 fixture: greedy merge trajectory is FORCED (unique argmax every round)") {
@@ -296,36 +301,25 @@ class TextAnalysisSpec extends SparkSuite {
       (i + 1, a, b, a + b, n) }.toArray)
   }
 
-  test("trainBpeMerges batched argmax equals the sequential recurrence") {
+  test("trainBpeMerges matches the sequential recurrence on overlap and self-pair") {
     import graft.operators.TextAnalysis
-    def table(docs: org.apache.spark.sql.DataFrame, n: Int, k: Int) =
-      TextAnalysis.trainBpeMerges(docs, "text", nMerges = n, argmaxBatch = k)
+    def table(docs: org.apache.spark.sql.DataFrame, n: Int) =
+      TextAnalysis.trainBpeMerges(docs, "text", nMerges = n)
         .orderBy("rank").as[(Int, String, String, String, Long)].collect()
     def corpus(words: (String, Int)*) =
       Seq((1L, words.flatMap { case (w, f) => Seq.fill(f)(w) }.mkString(" ")))
         .toDF("doc_id", "text")
-    // OVERLAP HAZARD — the fixture where a naive disjoint batch diverges:
-    // round-1 counts are (a,b)=10, (x,a)=8, (d,e)=7; merging (a,b) creates
-    // (x,ab)=8, so the TRUE second merge is (x,ab), not the stale disjoint
-    // (d,e). The acceptance scan must stop the batch at (x,a) (touching,
-    // count unknown after the merge) and land on the sequential table.
+    // OVERLAP: round-1 counts are (a,b)=10, (x,a)=8, (d,e)=7; merging
+    // (a,b) creates (x,ab)=8, so the second merge is (x,ab), not the
+    // stale round-1 runner-up (d,e) — counts are recounted every round.
     val overlap = corpus("xab" -> 8, "de" -> 7, "ab" -> 2)
-    val overlapExpect = Array(
-      (1, "a", "b", "ab", 10L), (2, "x", "ab", "xab", 8L), (3, "d", "e", "de", 7L))
-    assert(table(overlap, 3, 8) === overlapExpect)
-    assert(table(overlap, 3, 1) === overlapExpect)
-    // SELF-PAIR HAZARD — merging (c,c) creates (cc,c)=9 ABOVE the stale
-    // disjoint (d,e)=8; a batch that continued past the self-pair would
-    // record (d,e) second. Obligation 5 closes the batch at (c,c).
+    assert(table(overlap, 3) === Array(
+      (1, "a", "b", "ab", 10L), (2, "x", "ab", "xab", 8L), (3, "d", "e", "de", 7L)))
+    // SELF-PAIR: merging (c,c) greedily left-to-right leaves [cc, c] and
+    // creates (cc,c)=9 ABOVE the round-1 runner-up (d,e)=8.
     val selfPair = corpus("ccc" -> 9, "de" -> 8)
-    val selfExpect = Array(
-      (1, "c", "c", "cc", 18L), (2, "cc", "c", "ccc", 9L), (3, "d", "e", "de", 8L))
-    assert(table(selfPair, 3, 8) === selfExpect)
-    assert(table(selfPair, 3, 1) === selfExpect)
-    // REAL TEXT — the q136 shape: batched and sequential fits must agree
-    // bit-for-bit over a full 20-merge table (counts included)
-    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
-    assert(table(docs, 20, 8) === table(docs, 20, 1))
+    assert(table(selfPair, 3) === Array(
+      (1, "c", "c", "cc", 18L), (2, "cc", "c", "ccc", 9L), (3, "d", "e", "de", 8L)))
   }
 
   test("trainBpeMerges fitSample: deterministic sample fit agrees with the full fit") {
@@ -907,12 +901,12 @@ class TextAnalysisSpec extends SparkSuite {
   test("unigramEmStep matches brute-force expected counts and log-likelihood") {
     val vocab = Map("a" -> math.log(0.3), "b" -> math.log(0.2),
       "ab" -> math.log(0.35), "ba" -> math.log(0.15))
-    val wf = Seq(("abab", 3L), ("ba", 2L), ("aab", 1L)).toDF("_w", "_f")
+    val wf = Array(("abab", 3L), ("ba", 2L), ("aab", 1L))
     val (got, gotLl) = TextAnalysis.unigramEmStep(wf, vocab, maxPieceLen = 2)
     // reference: per word, posterior-weighted piece occurrence counts
     val exp = collection.mutable.HashMap.empty[String, Double]
     var expLl = 0.0
-    for ((w, f) <- Seq(("abab", 3L), ("ba", 2L), ("aab", 1L))) {
+    for ((w, f) <- wf) {
       val segs = allSegs(w, vocab, 2)
       val z = logSumExp(segs.map(_._2))
       expLl += f * z
@@ -942,8 +936,7 @@ class TextAnalysisSpec extends SparkSuite {
     val lse = logSumExp(out.map(_.getDouble(2)).toSeq)
     assert(math.abs(lse) < 1e-3, s"logsumexp(logp) = $lse")
     // EM monotonicity on the same corpus: LL never decreases across steps
-    val wf = docs.select(explode(TextAnalysis.wordTokens(col("text"))).as("_w"))
-      .groupBy("_w").agg(count(lit(1)).as("_f"))
+    val wf = TextAnalysis.wordTypes(docs, "text", None, "trainUnigramLm")
     val seed = pieces.toSeq.sorted
     val init = seed.map(p => p -> math.log(1.0 / seed.size)).toMap
     val (c1, ll1) = TextAnalysis.unigramEmStep(wf, init, 4)
@@ -951,6 +944,10 @@ class TextAnalysisSpec extends SparkSuite {
     val v1 = c1.map { case (p, c) => p -> (math.log(math.max(c, 1e-12)) - math.log(total)) }
     val (_, ll2) = TextAnalysis.unigramEmStep(wf, v1, 4)
     assert(ll2 >= ll1 - 1e-9, s"EM decreased likelihood: $ll1 -> $ll2")
+    // the fit does not depend on partitioning, exp_count included
+    for (parts <- Seq(1, 7))
+      assert(TextAnalysis.trainUnigramLm(docs.repartition(parts), "text", vocabSize = 30,
+        maxPieceLen = 4, emIters = 2).collect().toSeq === out.toSeq)
   }
 
   test("unigramEncodeStats: Viterbi picks max-likelihood, ties prefer fewer pieces, unk covers") {
