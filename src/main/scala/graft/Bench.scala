@@ -72,7 +72,7 @@ object Bench {
     //                      native TopKByScore kernel; the kernel is the
     //                      graft-specific path worth tracking
     //   q79_cc_star      — shares q65's oracle (same components, star vs
-    //                      propagation); q65 keeps the longer record history
+    //                      driver union-find); q65 keeps the longer record history
     //   q101_binary_ann  — its hamming stage runs verbatim inside q102's
     //                      shortlist phase
     //   q198_unigram_char_twin — q197's plumbing on a smaller vocab (the

@@ -90,9 +90,9 @@ private[graft] object DedupQueries {
         |FROM c WHERE levenshtein(ta, tb) <= 6
         |ORDER BY id_a, id_b""".stripMargin)),
 
-    // Dedup clusters: LSH candidate pairs -> connected components (min-label
-    // propagation, keyed joins only). Cluster id = smallest member doc_id,
-    // i.e. the canonical representative a dedup pass would keep.
+    // Dedup clusters: LSH candidate pairs -> connected components (one edge
+    // collect, union-find on the driver). Cluster id = smallest member
+    // doc_id, i.e. the canonical representative a dedup pass would keep.
     Q("q65_dedup_clusters", (s, dir) => {
       val d = Tables.documents(s, dir)
       val pairs = Dedup.lshCandidatePairs(d, "doc_id", "text").select("id_a", "id_b")
@@ -113,8 +113,8 @@ private[graft] object DedupQueries {
          |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)),
 
     // The extreme-scale CC twin: same clusters as q65 via alternating
-    // large-star/small-star rounds (O(log^2 n) rounds vs graph diameter) —
-    // the algorithm to run when dup chains are deep. Same oracle as q65.
+    // large-star/small-star rounds (O(log^2 n) rounds, no driver-side edge
+    // set) — the path q65 takes past Dedup.MaxDriverEdges. Same oracle.
     Q("q79_cc_star", (s, dir) => {
       val d = Tables.documents(s, dir)
       val pairs = Dedup.lshCandidatePairs(d, "doc_id", "text").select("id_a", "id_b")
@@ -329,7 +329,7 @@ private[graft] object DedupQueries {
         .orderBy("doc_id")
     }, Oracle(
       // q65's cluster CTEs verbatim; kept = docs that ARE their cluster's
-      // min label (the canonical member fuzzyDedupKeepFirst retains)
+      // smallest id (the canonical member fuzzyDedupKeepFirst retains)
       s"""WITH RECURSIVE $dBandedCtes,
          |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |FROM banded a JOIN banded b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),

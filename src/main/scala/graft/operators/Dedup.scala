@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Deduplication operators for LLM-data pipelines (north-star extension):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard.
@@ -486,18 +487,18 @@ object Dedup {
   /** Fuzzy-dedup TRANSFORM: keep exactly ONE document per near-duplicate
     * cluster — the standard MinHash-LSH dedup pass a pretraining pipeline
     * runs (candidate pairs from [[lshCandidatePairs]], clusters from
-    * [[connectedComponents]] min-label propagation, canonical member =
-    * smallest id, i.e. the cluster label itself). The transform twin of
+    * [[connectedComponents]], canonical member = smallest id, i.e. the
+    * cluster label itself). The transform twin of
     * the q65 cluster AUDIT, the way [[spanScrub]] is [[spanDupStats]]'
     * transform twin and [[dedupKeepFirst]] is the exact-hash one: callers
     * get back the deduplicated corpus, original schema intact.
     *
     * Scale shape: the pair/cluster arm carries only int64 ids (LSH bands
-    * hash-bucket candidates — no all-pairs stage; CC shuffles id pairs);
+    * hash-bucket candidates — no all-pairs stage; CC collects id pairs);
     * the kept-id set joins back as a LEFT SEMI join on the id, so document
-    * text crosses the wire once and rows never duplicate. For deep dup
-    * chains at extreme scale swap in [[connectedComponentsStar]] — same
-    * labels, O(log^2 n) rounds.
+    * text crosses the wire once and rows never duplicate. Past
+    * [[MaxDriverEdges]] candidate pairs CC runs [[connectedComponentsStar]]
+    * — same labels, O(log^2 n) rounds.
     *
     * `tau`: optional similarity verification. LSH banding is a RECALL
     * device — at 100 TB a band's 4-slot key WILL collide for dissimilar
@@ -699,7 +700,7 @@ object Dedup {
     * Scale shape: candidates vs the index are a (band, bkey) equi-join —
     * never all-pairs, never index text (signatures only, 16 int64s); the
     * within-batch arm is the same banded self-join as
-    * [[lshCandidatePairs]] + [[connectedComponents]] min-label rounds.
+    * [[lshCandidatePairs]] + [[connectedComponents]]' one edge collect.
     * New-wave text crosses the wire exactly once (the final semi join). */
   def incrementalFuzzyDedupKeepFirst(newDocs: DataFrame, idCol: String, textCol: String,
                                      index: DataFrame, tau: Double): DataFrame = {
@@ -967,9 +968,9 @@ object Dedup {
     *
     * Scale shape: the wave-vs-index probe is a (band, bkey) equi-join —
     * never all-pairs, never media bytes (fingerprints only); the
-    * within-wave arm is the [[hammingNearDupPairs64]] self-join + CC
-    * min-label rounds. Exact within the radius (pigeonhole:
-    * maxHamming < 4 bands of 16 bits). */
+    * within-wave arm is the [[hammingNearDupPairs64]] self-join + one
+    * [[connectedComponents]] edge collect. Exact within the radius
+    * (pigeonhole: maxHamming < 4 bands of 16 bits). */
   def incrementalHammingDedupKeepFirst(newItems: DataFrame, idCol: String,
                                        hashCol: String, index: DataFrame,
                                        maxHamming: Int = 3): DataFrame = {
@@ -1017,83 +1018,76 @@ object Dedup {
       .distinct()
   }
 
+  /** Most edges [[connectedComponents]] unions on the driver; a graph with
+    * more runs [[connectedComponentsStar]]. Driver heap at long ids is
+    * about 240 bytes per edge while the call runs: the collected row
+    * (~120 B), the union-find map entries of its endpoints (~60 B) and the
+    * member arrays of the handback (~60 B); measured 119 MiB at the cap
+    * with 1.5 distinct endpoints per edge. The broadcast handback is at
+    * most 2·cap `(id, label)` long pairs, 16 MiB at the cap. */
+  final val MaxDriverEdges: Int = 1 << 19
+
   /** Connected components over near-dup candidate pairs — turns pairwise
     * matches into dedup clusters (component id = smallest member id, the
     * canonical representative to keep).
     *
-    * Min-label propagation: every node starts as its own label; each round
-    * every node takes the min label among itself and its neighbors; stop at
-    * fixpoint. Rounds needed = graph diameter, and near-dup clusters are
-    * shallow (LSH bands link all members of a clique directly), so this
-    * converges in a handful of keyed-join rounds — each round one shuffle
-    * of (edges + labels), no driver-side graph. The per-round driver scalar
-    * (changed-count) is the same iterative-fit pattern as k-means
-    * ([[graft.operators.Similarity.trainCentroids]]). For graphs with long
-    * chains at extreme scale, use [[connectedComponentsStar]] (same join
-    * primitives, O(log^2 n) rounds instead of diameter).
+    * One bounded collect of the non-null edges (at most [[MaxDriverEdges]]
+    * + 1 rows: the edge plan's own jobs, nothing per hop), then union-find
+    * with path compression on the driver, keyed by the id values
+    * themselves, so any id type works (long doc ids, string media ids).
+    * The components go back as a local frame of member arrays; Spark's own
+    * `array_min` names each one, so the label follows Spark's ordering of
+    * the id type, and the exploded `(id, label)` rows left-join into
+    * `nodes` under a broadcast. A node with no edge labels itself. Nothing
+    * is persisted or detached, no shuffle is added, and a chain of any
+    * length costs the same one collect. A graph with more edges than the
+    * cap runs [[connectedComponentsStar]] instead (O(log^2 n) rounds).
     *
-    * `nodes`: one column `id`; `edges`: columns `id_a`, `id_b` (undirected).
-    * Output: (id, component). */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 50): DataFrame = {
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Every round's labels are lineage-severed ([[Relational.detach]], same
-    // rationale as [[connectedComponentsStar]]): each round references the
-    // previous labels TWICE (self union + neighbor join), and persist only
-    // caches DATA — the analyzer still builds the full logical tree before
-    // cache substitution, so un-severed lineage doubles the plan per round
-    // and a ~30-round graph OOMs the driver on plan construction alone.
-    // Superseded rounds are freed eagerly ([[Relational.release]]), so live
-    // storage is bounded at two rounds, never rounds-so-far. The handback
-    // is already in detached form — no cacheManager entry reaches the
-    // caller.
-    var detached = Relational.detach(nodes.select(col("id"), col("id").as("component")))
-    var labels = detached
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val viaNeighbors = sym
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("component"), lit(0).as("_self"))
-      // Change detection folded INTO the round's single job: the self row
-      // is tagged, so one groupBy yields both the new min label and the old
-      // (self) label — no extra join — and the changed-row count rides the
-      // detach's materialization pass as an observed metric
-      // ([[Relational.detachWithFlagCount]]; boolean-grade, and the loop
-      // only ever branches on changed == 0). One job per round, down from
-      // the r21 detach + count pair.
-      val (next, changedCount) = Relational.detachWithFlagCount(
-        labels.withColumn("_self", lit(1)).unionByName(viaNeighbors)
-          .groupBy("id").agg(
-            min("component").as("component"),
-            max(when(col("_self") === 1, col("component"))).as("_old"))
-          .withColumn("_chg", col("component") =!= col("_old")),
-        "_chg")
-      changed = changedCount
-      Relational.release(detached) // previous round: superseded, free it now
-      detached = next
-      labels = next.select(col("id"), col("component"))
-      iter += 1
+    * `nodes`: one column `id`; `edges`: columns `id_a`, `id_b`
+    * (undirected, cast to the type of `id`; an edge with a null endpoint is
+    * dropped, and an endpoint outside `nodes` still links the nodes it
+    * touches). Output: (id, component), one row per `nodes` row and none
+    * for an endpoint outside it. */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val idType = nodes.schema("id").dataType
+    val pairs = edges
+      .select(col("id_a").cast(idType).as("a"), col("id_b").cast(idType).as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
+      .limit(MaxDriverEdges + 1).collect()
+    if (pairs.length > MaxDriverEdges) connectedComponentsStar(nodes, edges)
+    else {
+      val parent = new java.util.HashMap[Any, Any]()
+      def find(x: Any): Any = {
+        var root = x
+        var up = parent.get(root)
+        while (up != null && up != root) { root = up; up = parent.get(root) }
+        var y = x
+        while (y != root) y = parent.put(y, root)
+        root
+      }
+      pairs.foreach { r =>
+        val (a, b) = (find(r.get(0)), find(r.get(1)))
+        parent.put(a, b)
+        parent.putIfAbsent(b, b)
+      }
+      val members = parent.keySet.toArray.groupBy(find).values.map(m => Row(m.toSeq))
+      val labels = nodes.sparkSession.createDataFrame(
+          java.util.Arrays.asList(members.toSeq: _*),
+          StructType(Seq(StructField("_m", ArrayType(idType, containsNull = false)))))
+        .select(explode(col("_m")).as("id"), array_min(col("_m")).as("_label"))
+      nodes.select(col("id")).join(broadcast(labels), Seq("id"), "left")
+        .select(col("id"), coalesce(col("_label"), col("id")).as("component"))
     }
-    sym.unpersist()
-    // Non-converged labels are WRONG labels (a node maxIter+1 hops from its
-    // component's min would keep a stale id) — fail loudly, never return them.
-    require(changed == 0,
-      s"connectedComponents did not converge within $maxIter rounds " +
-        "(graph diameter exceeds maxIter); raise maxIter or pre-contract long chains")
-    labels
   }
 
   /** Connected components by alternating large-star / small-star rounds —
     * the extreme-scale twin of [[connectedComponents]] (same contract, same
-    * output), for graphs whose diameter makes per-hop label propagation
-    * unaffordable. Public algorithm: Kiveris, Lattanzi, Mirrokni, Rastogi,
-    * Vassilvitskii, "Connected Components in MapReduce and Beyond" (SoCC
-    * 2014) — converges in O(log^2 n) rounds on ANY graph shape, vs
-    * diameter rounds for propagation (a 10^6-hop near-dup chain is 10^6
-    * propagation rounds but ~20 star rounds).
+    * output), for edge sets too large to union on the driver: past
+    * [[MaxDriverEdges]] [[connectedComponents]] runs this itself. Public
+    * algorithm: Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
+    * "Connected Components in MapReduce and Beyond" (SoCC 2014) — converges
+    * in O(log^2 n) rounds on ANY graph shape (a 10^6-hop near-dup chain
+    * takes ~20 star rounds).
     *
     * Each round is two star operations over the canonical edge set, every
     * one a single keyed shuffle (a partition-wide `min` window — no joins):
@@ -1109,15 +1103,15 @@ object Dedup {
     * per round is bounded by the (deduplicated, monotonically
     * non-increasing) edge set — ids only, never payloads.
     *
-    * Storage/durability contract matches [[connectedComponents]]: every
-    * round and the handback are lineage-severed via [[Relational.detach]]
+    * Storage/durability: every round and the handback are lineage-severed
+    * via [[Relational.detach]]
     * (set a checkpoint dir for the executor-loss-safe mode; round blocks
     * are reclaimed as frames go out of scope), no cacheManager entry is
     * handed to the caller, and non-convergence within `maxIter` fails
     * loudly rather than returning partial labels.
     *
     * `nodes`: one column `id`; `edges`: columns `id_a`, `id_b` (undirected).
-    * Output: (id, component). */
+    * Output: (id, component), one row per node. */
   def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
                               maxIter: Int = 25): DataFrame = {
     // Every round is detached ([[Relational.detach]]): each star operation

@@ -22,9 +22,8 @@ object Graph {
     * oracle-expressible).
     *
     * Same iterative-driver-loop discipline as
-    * [[Dedup.connectedComponents]] / [[Similarity.trainCentroids]]: each
-    * round is ONE edge-keyed join + one destination-keyed aggregate over
-    * (id, double) rows — never the corpus's payload columns. The dangling
+    * [[Dedup.connectedComponentsStar]]: each round is ONE edge-keyed join +
+    * one destination-keyed aggregate over (id, double) rows — never the corpus's payload columns. The dangling
     * mass (a single-row agg over the detached ranks) rides INSIDE the
     * round's job as a broadcast 1-row crossJoin rather than a separate
     * driver collect, so each round is exactly one job (r21: the collect

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.catalyst.expressions.DistributedSequenceID
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
 /** Join / set / order operators (SURVEY §2.4, §2.9, §2.10).
   *
@@ -28,15 +27,15 @@ object Relational {
     * survive any executor loss at the cost of one write to the checkpoint
     * filesystem. Used by every operator here that must materialize an
     * intermediate ([[withRowIndex]], [[Batching.prefixSum]],
-    * [[graft.operators.Dedup]]'s hash tables and connected components).
+    * [[graft.operators.Dedup]]'s hash tables and star connected components).
     *
     * Storage-growth caveat: a detached frame OWNS storage — localCheckpoint
     * blocks in executor memory/disk, or reliable-checkpoint files that
     * Spark never deletes on its own (`spark.cleaner.referenceTracking
     * .cleanCheckpoints` only cleans on driver GC). One-shot handbacks are
     * reclaimed when the caller drops the frame; ITERATIVE callers must free
-    * each superseded round deterministically via [[release]] — both
-    * connected-components loops do — or a long run accumulates one copy of
+    * each superseded round deterministically via [[release]] — the star
+    * connected-components loop does — or a long run accumulates one copy of
     * its working set per round.
     */
   private[graft] def detach(df: DataFrame): DataFrame =
@@ -48,28 +47,6 @@ object Relational {
     * afterwards. */
   private[graft] def release(df: DataFrame): Unit =
     GraftSqlBridge.releaseDetached(df)
-
-  /** [[detach]] with a boolean-flag row count folded into the SAME
-    * materialization job — one job per fixpoint round instead of two for
-    * iterative operators whose only per-round scalar is "did anything
-    * change". The count rides an [[org.apache.spark.sql.Observation]] of
-    * the detach's own pass (`count`, not `sum`, so empty input gives 0).
-    *
-    * The count is BOOLEAN-GRADE, not an exact statistic: observed metrics
-    * are accumulators, and a task recomputed after a lost shuffle or
-    * block can add its partition again, so the value can overcount under
-    * task retry. It can never turn zero into nonzero or nonzero into zero
-    * (a retry of a zero-flag partition adds zero), so `count == 0` /
-    * `count > 0` tests are exact; callers must only branch on those and
-    * pay a separate job when they need the exact count. */
-  private[graft] def detachWithFlagCount(df: DataFrame,
-                                         flagCol: String): (DataFrame, Long) = {
-    require(df.schema(flagCol).dataType == BooleanType,
-      s"detachWithFlagCount: $flagCol must be boolean, is ${df.schema(flagCol).dataType}")
-    val obs = Observation()
-    val detached = detach(df.observe(obs, count(when(col(flagCol), 1)).as("flagged")))
-    (detached, obs.get("flagged").asInstanceOf[Long])
-  }
 
   /** Attach a dense 0-based row index following `orderCols`.
     *

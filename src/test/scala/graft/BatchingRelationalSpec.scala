@@ -228,56 +228,6 @@ class BatchingRelationalSpec extends SparkSuite {
     assert(idx.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
   }
 
-  test("detachWithFlagCount: detach's job count, exact count, 0 on empty, reliable dir") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf[T](body: => T): (T, Int) = {
-      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
-      jobs.set(0)
-      val out = body
-      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
-      (out, jobs.get)
-    }
-    // 1000 groups (a shuffle stage, then the result stage); 143 flagged
-    def grouped = spark.range(0, 100000).groupBy((col("id") % 1000).as("k")).count()
-      .withColumn("flag", col("k") % 7 === 0)
-    // no shuffle; flags are true, false AND null (a null flag is not counted)
-    def narrow = spark.range(0, 100000)
-      .withColumn("flag", when(col("id") % 5 =!= 1, col("id") % 7 === 0))
-    val narrowFlagged = (0L until 100000L).count(i => i % 5 != 1 && i % 7 == 0)
-    def check(): Unit = for ((df, flagged, rows) <- Seq(
-        (() => grouped, 143L, 1000L), (() => narrow, narrowFlagged.toLong, 100000L))) {
-      val (_, plainJobs) = jobsOf(Relational.detach(df()))
-      val ((out, n), jobs) = jobsOf(Relational.detachWithFlagCount(df(), "flag"))
-      assert(jobs === plainJobs, "the count must ride the detach's own jobs")
-      assert(n === flagged)
-      assert(out.count() === rows)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      check()
-      val (_, empty) = Relational.detachWithFlagCount(
-        spark.range(0).withColumn("flag", lit(true)), "flag")
-      assert(empty === 0L)
-      intercept[IllegalArgumentException](
-        Relational.detachWithFlagCount(spark.range(3).toDF("flag"), "flag"))
-      val dir = Files.createTempDirectory("graft-ckpt").toFile
-      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-      try {
-        check()
-        def files(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-        assert(files(dir).nonEmpty, "no reliable checkpoint files were written")
-      } finally {
-        spark.sparkContext.setCheckpointDir(null) // back to local checkpoints
-        org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("positionalJoin aligns by rank on each side's own order (J1)") {
     val left = Seq(("x", 2), ("y", 1)).toDF("lv", "lk")
     val right = Seq((100, "b"), (200, "a")).toDF("rk", "rv")

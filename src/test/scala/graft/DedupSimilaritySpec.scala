@@ -540,7 +540,7 @@ class DedupSimilaritySpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
     spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
     try {
-      val out = Dedup.connectedComponents(
+      val out = Dedup.connectedComponentsStar(
         (1L to 4L).toDF("id"), Seq((1L, 2L)).toDF("id_a", "id_b"))
       assert(out.count() === 4)
       assert(out.storageLevel === org.apache.spark.storage.StorageLevel.NONE)

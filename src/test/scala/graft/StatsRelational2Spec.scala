@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Relational, Stats, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-2 operators: as-of/range joins, group top-k, distribution stats,
@@ -378,6 +379,34 @@ class StatsRelational2Spec extends SparkSuite {
     val out2 = Dedup.connectedComponents((1L to 7L).toDF("id"), chain)
       .select("component").distinct().as[Long].collect()
     assert(out2 === Array(1L))
+    // one row per node, on both paths: an edge with a null endpoint is
+    // dropped, and an endpoint outside `nodes` (99) gets no row
+    val loose = Seq((Option(1L), Option(2L)), (None, Some(5L)), (Some(5L), Some(99L)))
+      .toDF("id_a", "id_b")
+    for (cc <- ccPaths)
+      assert(cc(Seq(1L, 2L, 5L).toDF("id"), loose).orderBy("id").as[(Long, Long)]
+        .collect() === Array((1L, 1L), (2L, 1L), (5L, 5L)))
+  }
+
+  /** Both connected-components paths: driver union-find and star rounds. */
+  private val ccPaths = Seq[(DataFrame, DataFrame) => DataFrame](
+    graft.operators.Dedup.connectedComponents,
+    graft.operators.Dedup.connectedComponentsStar(_, _))
+
+  /** The result of `body` and the Spark jobs launched while it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftSqlBridge.awaitListeners(spark)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("connectedComponents returns an unpersisted frame (no caller-owned cache)") {
@@ -390,25 +419,53 @@ class StatsRelational2Spec extends SparkSuite {
 
   test("connectedComponents survives a deep chain (per-round lineage sever)") {
     import graft.operators.Dedup
-    // 21 nodes in a path = 20 propagation rounds. Without the per-round
-    // detach the logical plan doubles every round (~2^20 nodes here) and
-    // the driver dies building the tree — this is the regression guard.
+    // A path's diameter costs nothing: one edge collect, then union-find on
+    // the driver. The result holds no storage (nothing persisted or
+    // detached), so no block outlives the call.
     val before = spark.sparkContext.getPersistentRDDs.size
     val chain = (1L until 21L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val out = Dedup.connectedComponents((1L to 21L).toDF("id"), chain)
     assert(out.select("component").distinct().as[Long].collect() === Array(1L))
     assert(out.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    // superseded rounds were released eagerly: live checkpoint blocks are
-    // bounded (the handback's own frame), not one per round
     assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
-      "per-round detach frames were not released")
+      "connectedComponents left storage behind")
+    // 1,000 links (a propagation loop needs 1,000 rounds): edges from a
+    // local frame launch no job, and a Spark-computed edge frame costs its
+    // collect plus the label join, whatever the length
+    val local = (1L to 1000L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (lazyOut, buildJobs) = jobsOf(Dedup.connectedComponents((1L to 1001L).toDF("id"), local))
+    assert(buildJobs === 0)
+    assert(lazyOut.select("component").distinct().as[Long].collect() === Array(1L))
+    val computed = spark.range(1, 1001).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val (labels, jobs) = jobsOf(
+      Dedup.connectedComponents(spark.range(1, 1002).toDF("id"), computed).collect())
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(labels.length === 1001 && labels.forall(_.getLong(1) == 1L))
+  }
+
+  test("connectedComponents past MaxDriverEdges takes the star path") {
+    import graft.operators.Dedup
+    // a star of cap + 1 edges centred on 0, plus the pair 7-8 inside it
+    val n = Dedup.MaxDriverEdges + 1L
+    val edges = spark.range(1, n + 1).select(lit(0L).as("id_a"), col("id").as("id_b"))
+      .unionByName(Seq((7L, 8L)).toDF("id_a", "id_b"))
+    val nodes = spark.range(0, n + 2).toDF("id")
+    val (out, jobs) = jobsOf(Dedup.connectedComponents(nodes, edges))
+    // the driver path runs one collect; the star rounds run several jobs
+    // and hand back a detached frame
+    assert(jobs > 1, s"$jobs jobs")
+    assert(out.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.execution.LogicalRDD])
+    val byLabel = out.groupBy("component").agg(count(lit(1)), min("id"), max("id"))
+      .orderBy("component").as[(Long, Long, Long, Long)].collect()
+    assert(byLabel === Array((0L, n + 1, 0L, n), (n + 1, 1L, n + 1, n + 1)))
   }
 
   test("connectedComponentsStar: deep chain beyond propagation's budget, dup " +
     "edges, singletons — min-rooted labels in O(log^2) rounds") {
     import graft.operators.Dedup
-    // a 61-hop path: diameter 60 > propagation's default maxIter 50, but a
-    // handful of star rounds; plus duplicate/reversed edges and singletons
+    // a 61-hop path: a handful of star rounds, not one per hop; plus
+    // duplicate/reversed edges and singletons
     val chain = (1L until 61L).map(i => (i, i + 1))
     val edges = (chain ++ chain.map(_.swap) ++ Seq((70L, 71L)))
       .toDF("id_a", "id_b")
@@ -455,11 +512,12 @@ class StatsRelational2Spec extends SparkSuite {
       val n = 2 + rnd.nextInt(10)
       val edges = Seq.fill(rnd.nextInt(10))((1 + rnd.nextInt(n), 1 + rnd.nextInt(n)))
         .filter(e => e._1 != e._2)
-      val got = Dedup.connectedComponents(
-        (1L to n.toLong).toDF("id"),
-        edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
-      assert(got === refComponents(n, edges), s"n=$n edges=$edges")
+      for (cc <- ccPaths) {
+        val got = cc((1L to n.toLong).toDF("id"),
+          edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("id_a", "id_b"))
+          .collect().map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
+        assert(got === refComponents(n, edges), s"n=$n edges=$edges")
+      }
     }
   }
 
