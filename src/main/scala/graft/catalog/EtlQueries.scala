@@ -106,7 +106,7 @@ private[graft] object EtlQueries {
         |CAST(dense_rank() OVER (ORDER BY c_mktsegment) - 1 AS BIGINT) AS seg_code
         |FROM customer ORDER BY c_custkey""".stripMargin)),
 
-    // E2/A3/J3 — global z-score via one agg + broadcast apply.
+    // E2/A3/J3 — global z-score: one collected agg, applied as literals.
     Q("q06_standard_scale", (s, dir) => {
       Encode.standardScale(Tables.customer(s, dir), Seq("c_acctbal"))
         .select(col("c_custkey"), round(col("c_acctbal_z"), 6).as("acctbal_z"))
@@ -453,7 +453,7 @@ private[graft] object EtlQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Composed pipeline (SURVEY §7.2 shape): dirty ingest -> ffill/bfill ->
-    // global z-score (broadcast fit) -> event-time window aggregate.
+    // global z-score (literal-applied fit) -> event-time window aggregate.
     Q("q38_pipeline", (s, dir) => {
       val base = dirtyEvents(s, dir).select("event_id", "user_id", "ts", "v")
       val filled = Clean.fillForwardBackward(base, Seq("v"), Seq("ts", "event_id"), Seq("user_id"))
@@ -892,7 +892,7 @@ private[graft] object EtlQueries {
     // (read_csv_s3_train.py:57-118): drop -> cast -> trim -> date parts w/
     // 1970 sentinels -> ffill/bfill -> Unknown-fill -> label encode (global
     // sorted-distinct fit) -> zero-fill numerics -> standard scale (global
-    // fit, broadcast apply). The flagship oracle row for SURVEY §3.1.
+    // fit, applied as literals). The flagship oracle row for SURVEY §3.1.
     //
     // The fill is CHUNK-SCOPED: the reference fills within each 100k-row
     // CSV chunk only (read_csv_s3_train.py:47,77-80 — `ffill().bfill()`
@@ -1005,7 +1005,7 @@ private[graft] object EtlQueries {
     // The 100-TB shape of q72's fill: the same osv5m cleaning chain with
     // the ffill/bfill windows PARTITIONED by the trimmed country key —
     // one shuffle on the key, per-partition sorts, no single-partition
-    // degeneration (q72 keeps the unpartitioned reference-parity fill).
+    // degeneration (q72 keeps the reference's chunk-scoped fill).
     // Output observes every fill-affected column plus the Unknown/zero
     // fills that run after it.
     Q("q78_osv5m_partfill", (s, dir) => {

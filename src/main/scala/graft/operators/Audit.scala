@@ -13,12 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Audit {
 
-  /** A1 — single-row frame of per-column null counts, one agg pass. */
+  /** A1 — single-row frame of per-column null counts, one agg pass. A
+    * count, not a sum, so an empty frame reads 0 nulls rather than NULL. */
   def nullCounts(df: DataFrame): DataFrame =
     df.agg(
       count(lit(1)).as("_rows"),
-      df.columns.map(c =>
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(c)): _*)
+      df.columns.map(c => count_if(col(c).isNull).as(c)): _*)
 
   /** A1 (long form) — `(column, n_null)` rows; drops the `_rows` helper. */
   def nullCountsLong(df: DataFrame): DataFrame = {
@@ -65,7 +65,7 @@ object Audit {
     val aggs = cols.flatMap { c =>
       Seq(min(col(c)).cast("string").as(s"_min_$c"),
         max(col(c)).cast("string").as(s"_max_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_null_$c"),
+        count_if(col(c).isNull).as(s"_null_$c"),
         (if (exact) countDistinct(col(c)) else approx_count_distinct(col(c)))
           .as(s"_ndv_$c"))
     }

@@ -60,15 +60,20 @@ object Clean {
     * degenerates to a single-partition sort, so callers should partition by
     * a natural key (the oracle queries partition by `user_id`); the
     * unpartitioned variant exists for exact reference parity on small data.
+    *
+    * Plan: one exchange on `partitionCols` (to a single partition when
+    * there are none), then one ascending and one descending running window
+    * over the full rows of each partition.
     */
   def fillForwardBackward(df: DataFrame, cols: Seq[String],
                           orderCols: Seq[String],
                           partitionCols: Seq[String] = Nil): DataFrame = {
     require(orderCols.nonEmpty,
       "fillForwardBackward needs orderCols: without a total order the fill direction is undefined")
-    // a fill target that is also a key would duplicate the column in the
-    // narrow join-back projection and die later with an ambiguous-reference
-    // AnalysisException; reject it here with a message that names the column
+    // a key as a fill target means nothing: a partition key is constant
+    // within its own window, and an order key's nulls would take a
+    // neighbour's key after the sort that placed them; reject it with a
+    // message that names the column
     val keyOverlap = cols.filter(c => orderCols.contains(c) || partitionCols.contains(c))
     require(keyOverlap.isEmpty,
       s"fill columns overlap order/partition keys: ${keyOverlap.mkString(", ")} " +
@@ -91,45 +96,22 @@ object Clean {
     // measured 10 sorts instead of 2 for the 5-column osv5m fill.
     // Batching keeps every same-spec window expression adjacent, so the
     // whole fill is exactly one asc sort + one desc sort per partition.
-    def inlineFill(d: DataFrame): DataFrame = {
-      def runningWindow(desc: Boolean) = {
-        val ord = orderCols.map(c => if (desc) col(c).desc else col(c).asc)
-        val base = if (partitionCols.isEmpty) Window.orderBy(ord: _*)
-                   else Window.partitionBy(partitionCols.map(col): _*).orderBy(ord: _*)
-        base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      }
-      val ffill = runningWindow(desc = false)
-      val bfill = runningWindow(desc = true)
-      val others = d.columns.filterNot(cols.contains).map(col)
-      d.select(others ++ cols.map(c =>
-          last(col(c), ignoreNulls = true).over(ffill).as(s"__ff_$c")) ++
-        cols.map(c =>
-          last(col(c), ignoreNulls = true).over(bfill).as(s"__bf_$c")): _*)
-        .select(d.columns.map(c =>
-          if (cols.contains(c)) coalesce(col(s"__ff_$c"), col(s"__bf_$c")).as(c)
-          else col(c)): _*)
+    def runningWindow(desc: Boolean) = {
+      val ord = orderCols.map(c => if (desc) col(c).desc else col(c).asc)
+      val base = if (partitionCols.isEmpty) Window.orderBy(ord: _*)
+                 else Window.partitionBy(partitionCols.map(col): _*).orderBy(ord: _*)
+      base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     }
-    // The two window passes sort the FULL row twice; columns that are
-    // neither keys nor fill targets ride along through both sorts for
-    // nothing. When those ride-alongs are wider than the fill set, it is
-    // cheaper to fill a narrow (keys ++ fill) projection and join the
-    // results back on the total-order key: the wide rows are then sorted at
-    // most once (by the join) instead of twice, and the double-sort touches
-    // only narrow rows. Equality is null-safe so rows that violate the
-    // non-null-key contract still behave exactly like the inline windows
-    // (which group nulls together) instead of being silently dropped.
-    val keyCols = (partitionCols ++ orderCols).distinct
-    val rideAlong = df.columns.filterNot(c => keyCols.contains(c) || cols.contains(c))
-    if (rideAlong.length <= cols.length) inlineFill(df)
-    else {
-      val narrow = inlineFill(df.select((keyCols ++ cols).map(col): _*))
-      val renamed = keyCols.foldLeft(narrow)((d, k) =>
-        d.withColumnRenamed(k, s"__fillkey_$k"))
-      val cond = keyCols.map(k => col(k) <=> col(s"__fillkey_$k")).reduce(_ && _)
-      df.drop(cols: _*).join(renamed, cond)
-        .drop(keyCols.map(k => s"__fillkey_$k"): _*)
-        .select(df.columns.map(col): _*) // restore the caller's column order
-    }
+    val ffill = runningWindow(desc = false)
+    val bfill = runningWindow(desc = true)
+    val others = df.columns.filterNot(cols.contains).map(col)
+    df.select(others ++ cols.map(c =>
+        last(col(c), ignoreNulls = true).over(ffill).as(s"__ff_$c")) ++
+      cols.map(c =>
+        last(col(c), ignoreNulls = true).over(bfill).as(s"__bf_$c")): _*)
+      .select(df.columns.map(c =>
+        if (cols.contains(c)) coalesce(col(s"__ff_$c"), col(s"__bf_$c")).as(c)
+        else col(c)): _*)
   }
 
   /** E5 — constant fill for string columns (`fillna("Unknown")`,

@@ -1080,6 +1080,11 @@ object Dedup {
     }
   }
 
+  /** Star rounds [[connectedComponentsStar]] runs before it fails: ~log^2
+    * of the largest component, so 25 covers a 10^6-hop chain (~20 rounds)
+    * with margin. */
+  private final val StarMaxRounds = 25
+
   /** Connected components by alternating large-star / small-star rounds —
     * the extreme-scale twin of [[connectedComponents]] (same contract, same
     * output), for edge sets too large to union on the driver: past
@@ -1104,23 +1109,22 @@ object Dedup {
     * non-increasing) edge set — ids only, never payloads.
     *
     * Storage/durability: every round and the handback are lineage-severed
-    * via [[Relational.detach]]
-    * (set a checkpoint dir for the executor-loss-safe mode; round blocks
-    * are reclaimed as frames go out of scope), no cacheManager entry is
-    * handed to the caller, and non-convergence within `maxIter` fails
-    * loudly rather than returning partial labels.
+    * via [[Relational.detach]] (set a checkpoint dir for the
+    * executor-loss-safe mode), each superseded round is freed eagerly
+    * through [[Relational.release]], no cacheManager entry is handed to the
+    * caller, and non-convergence within [[StarMaxRounds]] fails loudly
+    * rather than returning partial labels.
     *
     * `nodes`: one column `id`; `edges`: columns `id_a`, `id_b` (undirected).
     * Output: (id, component), one row per node. */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              maxIter: Int = 25): DataFrame = {
+  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame): DataFrame = {
     // Every round is detached ([[Relational.detach]]): each star operation
     // references its input 2-3 times, so an un-severed lineage grows the
     // logical plan ~4x PER ROUND — exponential plan trees OOM the driver
     // during plan stringification long before the data is a problem.
     // Detaching materializes the (ids-only, non-increasing) edge set once
-    // per round and keeps every round's plan flat; round blocks are
-    // reclaimed by the context cleaner as the frames go out of scope.
+    // per round and keeps every round's plan flat; the loop releases each
+    // superseded round as soon as the next one is detached.
     // Canonical undirected edge set: (u < v), self-loops dropped.
     var e = Relational.detach(edges
       .select(least(col("id_a"), col("id_b")).as("u"),
@@ -1156,7 +1160,7 @@ object Dedup {
     var sig = signature(e)
     var converged = sig._1 == 0L
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < StarMaxRounds) {
       val next = Relational.detach(smallStar(largeStar(e)))
       val nextSig = signature(next)
       Relational.release(e) // superseded round: free blocks/files eagerly
@@ -1174,8 +1178,8 @@ object Dedup {
       .groupBy("id").agg(min(col("_root")).as("_root"))
       .select(col("id"), coalesce(col("_root"), col("id")).as("component"))
     require(converged,
-      s"connectedComponentsStar did not converge within $maxIter rounds; " +
-        "raise maxIter (rounds needed are ~log^2 of the largest component)")
+      s"connectedComponentsStar did not converge within $StarMaxRounds rounds " +
+        "(rounds needed are ~log^2 of the largest component)")
     val result = Relational.detach(labels) // materializes: e no longer needed
     Relational.release(e)
     result

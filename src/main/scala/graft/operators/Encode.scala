@@ -11,10 +11,11 @@ import org.apache.spark.sql.{DataFrame, Column}
   * chunk so codes and stats drift across one dataset
   * (reference: Image_Train_Model/read_csv_s3_train.py:96-109,
   * model_architecture.py:132-135; SURVEY §4.3.1). We deliberately fit
-  * GLOBALLY: stats come from one aggregate over the whole table and are
-  * applied via a broadcast join (the reference's J3 "broadcast small lookup
-  * to every row" shape) — shuffle-free on the fact side, so it scales to
-  * 100 TB.
+  * GLOBALLY: stats come from one aggregate over the whole table. A
+  * one-row fit ([[standardScale]]) is collected and applied as literals; a
+  * table-shaped fit (vocabularies, per-group stats) is applied by a
+  * broadcast join (the reference's J3 "broadcast small lookup to every row"
+  * shape). Neither shuffles the fact side, so both scale to 100 TB.
   */
 object Encode {
 
@@ -81,8 +82,10 @@ object Encode {
   }
 
   /** E2 — z-score standardization with population stddev (sklearn ddof=0,
-    * read_csv_s3_train.py:106-109). One agg pass for all columns, one
-    * broadcast cross join to apply. Output column `<c>_z`. */
+    * read_csv_s3_train.py:106-109). The fit is one aggregate over all
+    * columns, collected eagerly while the frame is built (one collect); the
+    * apply is a projection with the moments as literals. Output column
+    * `<c>_z`; empty or all-null input gives null z-scores. */
   def standardScale(df: DataFrame, cols: Seq[String],
                     fitOn: Option[DataFrame] = None): DataFrame = {
     require(cols.nonEmpty, "standardScale needs at least one column")
@@ -91,13 +94,13 @@ object Encode {
     // in `cols` is identical there (e.g. the apply frame only adds columns
     // or rewrites columns outside `cols`).
     val stats = fitOn.getOrElse(df).agg(
-      avg(col(cols.head)).as(s"${cols.head}_mu"),
-      cols.tail.map(c => avg(col(c)).as(s"${c}_mu")) ++
-        cols.map(c => stddev_pop(col(c)).as(s"${c}_sigma")): _*)
-    val joined = df.crossJoin(broadcast(stats))
-    val scaled = cols.foldLeft(joined)((d, c) =>
-      d.withColumn(s"${c}_z", (col(c) - col(s"${c}_mu")) / col(s"${c}_sigma")))
-    scaled.drop(cols.flatMap(c => Seq(s"${c}_mu", s"${c}_sigma")): _*)
+      avg(col(cols.head)), cols.tail.map(c => avg(col(c))) ++
+        cols.map(c => stddev_pop(col(c))): _*).head()
+    // each literal keeps its aggregate's type (avg of a decimal is a decimal)
+    def moment(i: Int) = lit(stats.get(i)).cast(stats.schema(i).dataType)
+    cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
+      d.withColumn(s"${c}_z", (col(c) - moment(i)) / moment(cols.length + i))
+    }
   }
 
   /** E3 — min-max scaling to [0,1] (model_architecture.py:132,135), with an

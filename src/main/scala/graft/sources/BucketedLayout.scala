@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columns reads matching buckets pairwise and plans WITHOUT an Exchange on
   * either bucketed side. At 100 TB this converts the recurring dominant
   * cost of a join pipeline (shuffling the fact table per query) into a
-  * one-time write cost — the same trade `fillForwardBackward`'s narrow
-  * join-back and the IVF cell layout make elsewhere in this library.
+  * one-time write cost — the same trade the IVF cell layout makes
+  * elsewhere in this library.
   *
   * Both join sides must be written with the SAME bucket count and key for
   * the pairwise read; `sortCols` additionally sorts within each bucket file

@@ -61,11 +61,10 @@ class CleanSpec extends SparkSuite {
     assert(out === Array("Paris", "Paris", "  Lyon ", "  Lyon ", "  Lyon "))
   }
 
-  test("narrow join-back fill equals inline fill, including null partition keys") {
-    // Enough ride-along columns to trigger the join-back strategy (ride-
-    // alongs > fill cols), a null partition key (contract violation the
-    // null-safe join must survive identically to the inline windows), and
-    // head/tail null runs within each group.
+  test("wide-frame fill equals the narrow frame's fill, including null partition keys") {
+    // More ride-along columns than fill columns, a null partition key
+    // (a contract violation the windows must group like any other key),
+    // and head/tail null runs within each group.
     val base = Seq(
       (0L, Option("g1"), Option.empty[String], "x"),
       (1L, Option("g1"), Option("a"), "x"),
@@ -77,13 +76,13 @@ class CleanSpec extends SparkSuite {
       .withColumn("r2", lit(1)).withColumn("r3", lit(2.0))
     assert(base.columns.count(c => !Seq("idx", "grp", "v").contains(c)) > 1)
     val wide = Clean.fillForwardBackward(base, Seq("v"), Seq("idx"), Seq("grp"))
-    // narrow frame (no ride-alongs) takes the inline-window path
+    // the same fill over the keys and targets alone
     val inline = Clean.fillForwardBackward(
       base.select("idx", "grp", "v"), Seq("v"), Seq("idx"), Seq("grp"))
-    assert(wide.count() === 6) // null-key rows survive the join back
+    assert(wide.count() === 6) // null-key rows survive the fill
     assert(wide.select("idx", "grp", "v").orderBy("idx").collect()
       === inline.orderBy("idx").collect())
-    assert(wide.columns === base.columns) // caller's column order restored
+    assert(wide.columns === base.columns) // caller's column order kept
     // and the fill itself is right: g1 = all "a", null group = all "z"
     val byIdx = wide.orderBy("idx").select("v").as[String].collect()
     assert(byIdx === Array("a", "a", "a", "z", "z", null))
@@ -107,6 +106,14 @@ class CleanSpec extends SparkSuite {
     val long = Audit.nullCountsLong(fixture.select("country", "city", "road_index"))
     val m = long.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m === Map("country" -> 2, "city" -> 3, "road_index" -> 2))
+  }
+
+  test("null audit of an empty frame counts 0 nulls and passes the assertion") {
+    val empty = fixture.limit(0).select("country", "road_index")
+    assert(Audit.nullCounts(empty).collect() === Array(Row(0L, 0L, 0L)))
+    assert(Audit.totalNulls(empty) === 0L)
+    Audit.assertNoNulls(empty)
+    assert(Audit.profile(empty, Seq("country")).select("n_null").collect() === Array(Row(0L)))
   }
 
   test("schemaEcho lists fields in schema order with dtype and nullability") {

@@ -99,6 +99,19 @@ class EncodeSpec extends SparkSuite {
     assert(math.abs(z1 - (-1.5)) < 1e-12)
   }
 
+  test("standardScale: an empty or all-null fit gives null z; decimals scale to double") {
+    val allNull = Seq(("a", Option.empty[Double]), ("b", None)).toDF("cat", "x")
+    for (fit <- Seq(df.limit(0), allNull)) {
+      val z = Encode.standardScale(df, Seq("x"), fitOn = Some(fit))
+      assert(z.columns === Array("cat", "x", "x_z"))
+      assert(z.where(col("x_z").isNotNull).count() === 0)
+    }
+    // the mean of a decimal is a decimal: x = 1..7 still has z(1) = -1.5
+    val dec = Encode.standardScale(df.select(col("x").cast("decimal(10,2)").as("x")), Seq("x"))
+    assert(dec.schema("x_z").dataType === org.apache.spark.sql.types.DoubleType)
+    assert(math.abs(dec.where(col("x") === 1).head().getAs[Double]("x_z") + 1.5) < 1e-12)
+  }
+
   test("minMaxScale global: output in [0,1], min->0, max->1") {
     val out = Encode.minMaxScale(df, Seq("x"))
     val stats = out.agg(min("x_mm"), max("x_mm")).head()

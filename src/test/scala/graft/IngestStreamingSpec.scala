@@ -11,7 +11,7 @@ class IngestStreamingSpec extends SparkSuite {
   import spark.implicits._
 
   test("csvTyped: explicit schema, NA tokens -> null, permissive bad rows (S2)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv")
     Files.writeString(java.nio.file.Path.of(s"$dir/part.csv"),
       "id,name,score\n1,alice,2.5\n2,,3.5\n3,NA,1.0\nnot_a_long,bob,9.9\n")
     val schema = StructType(Seq(
@@ -25,7 +25,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("csvTyped corrupt-record column captures malformed rows verbatim (S2)") {
-    val dir = Files.createTempDirectory("graft_csv_bad").toString
+    val dir = tempDir("graft_csv_bad")
     Files.writeString(java.nio.file.Path.of(s"$dir/part.csv"),
       "id,name,score\n1,alice,2.5\nnot_a_long,bob,9.9\n")
     val schema = StructType(Seq(
@@ -44,7 +44,7 @@ class IngestStreamingSpec extends SparkSuite {
 
   test("bucketed layout: equi-join on the bucket key plans without a shuffle") {
     import graft.sources.BucketedLayout
-    val dir = Files.createTempDirectory("graft_bucket").toString
+    val dir = tempDir("graft_bucket")
     val li = graft.meta.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val or = graft.meta.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -97,7 +97,7 @@ class IngestStreamingSpec extends SparkSuite {
     // whose URIs (s3stub://bucket/key) flow through the SAME Hadoop
     // FileSystem resolution every remote store uses
     ObjectStore.installStub(spark)
-    val local = Files.createTempDirectory("graft_s3stub").toString
+    val local = tempDir("graft_s3stub")
     val base = ObjectStore.stubUri("test-bucket", local)
     val df = Seq((1L, "alice", 2.5), (2L, "bob", 3.5)).toDF("id", "name", "score")
     // sinks through the remote-style scheme (K1 csv, K4 parquet)
@@ -129,7 +129,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   private def writeEventsParquet(): (String, StructType) = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val df = Seq(
       (1L, "2024-01-01 00:05:00", "click", 1.0),
       (2L, "2024-01-01 00:15:00", "click", 2.0),
@@ -164,7 +164,7 @@ class IngestStreamingSpec extends SparkSuite {
     // the file-stream source requires a directory: stage the driver's file
     // (same bytes) into a temp dir rather than synthesizing a substitute
     val src = new java.io.File(s"$sf/events.parquet")
-    val dir = Files.createTempDirectory("graft_real_events").toString
+    val dir = tempDir("graft_real_events")
     Files.copy(src.toPath, java.nio.file.Path.of(dir, "events.parquet"))
     // the int64-nanos testdata generation throws on a bare read unless the
     // legacy conf is set — GraftSession.local sets it for the whole session
@@ -203,7 +203,7 @@ class IngestStreamingSpec extends SparkSuite {
     // stateless projection, so it composes onto the stream before the
     // keyed dropDuplicatesWithinWatermark — recrawl variants of one page
     // arriving inside the horizon dedup in flight.
-    val dir = Files.createTempDirectory("graft_stream_url").toString
+    val dir = tempDir("graft_stream_url")
     val df = Seq(
       (1L, "2024-01-01 00:01:00", "https://www.site.com/a"),
       (2L, "2024-01-01 00:02:00", "HTTP://site.com/a/"),            // dup of 1
@@ -224,7 +224,7 @@ class IngestStreamingSpec extends SparkSuite {
 
   test("jsonlTyped: explicit schema, corrupt capture, round-trips the shard sink") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_jsonl_src").toString
+    val dir = tempDir("graft_jsonl_src")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part.jsonl"),
       ("""{"id": 1, "text": "alpha"}""" + "\n" +
         """{"id": 2, "text": "beta"}""" + "\n" +
@@ -245,7 +245,7 @@ class IngestStreamingSpec extends SparkSuite {
     // the corpus-handoff round trip
     val docs = Seq((1L, "one body"), (2L, "two body"), (3L, "three body"))
       .toDF("doc_id", "text")
-    val shardDir = Files.createTempDirectory("graft_jsonl_rt").toString
+    val shardDir = tempDir("graft_jsonl_rt")
     graft.operators.Batching.writeJsonlShards(docs, "doc_id", "text", 2, 9L, shardDir)
     val back = graft.sources.Ingest.jsonlTyped(spark, s"$shardDir/shard=*",
       StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
@@ -259,7 +259,7 @@ class IngestStreamingSpec extends SparkSuite {
     // a .jsonl.gz shard exactly as crawl dumps ship it — codec inference
     // off the extension must make this read identical to the plain file,
     // corrupt-record capture included
-    val dir = Files.createTempDirectory("graft_jsonl_gz").toString
+    val dir = tempDir("graft_jsonl_gz")
     val out = new GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/shard-000.jsonl.gz"))
     out.write(("""{"id": 10, "text": "gz alpha"}""" + "\n" +
@@ -294,7 +294,7 @@ class IngestStreamingSpec extends SparkSuite {
     val warc = rec("warcinfo", "", "software: graft-test\r\n") ++
       rec("request", "https://example.com/a", "GET /a HTTP/1.1\r\n") ++
       rec("response", "https://example.com/a", httpBlock)
-    val dir = Files.createTempDirectory("graft_warc").toString
+    val dir = tempDir("graft_warc")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/seg.warc"), warc)
     // gzip layout: one member per record — Common Crawl's actual shape
     val gz = new java.io.ByteArrayOutputStream()
@@ -353,7 +353,7 @@ class IngestStreamingSpec extends SparkSuite {
     }
     val warc = rec("response", "https://example.com/post",
       "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html)
-    val dir = Files.createTempDirectory("graft_warc_content").toString
+    val dir = tempDir("graft_warc_content")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/seg.warc"), warc)
     val pages = Warc.readWarc(spark, dir)
       .where(col("warc_type") === "response")
@@ -385,7 +385,7 @@ class IngestStreamingSpec extends SparkSuite {
     val html = "<html><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav>" +
       "<p>" + body + "</p>" +
       "<footer><a href=\"/p\">Privacy</a> <a href=\"/t\">Terms</a> legal</footer></body></html>"
-    val dir = Files.createTempDirectory("graft_stream_content").toString
+    val dir = tempDir("graft_stream_content")
     val df = Seq((1L, html), (2L, html)).toDF("doc_id", "html")
     df.coalesce(1).write.mode("overwrite").parquet(dir)
     val stream = EventStreams.readFileStream(spark, dir, df.schema)
@@ -402,7 +402,7 @@ class IngestStreamingSpec extends SparkSuite {
     // filter chain composes onto a stream with NO state store at all —
     // the shape a live ingest pipeline runs between crawl and dedup
     // (q145's streaming twin; gopher/charClass flags compose the same way).
-    val dir = Files.createTempDirectory("graft_stream_quality").toString
+    val dir = tempDir("graft_stream_quality")
     val df = Seq(
       (1L, "a perfectly clean document body"),
       (2L, "contains the badword spamtok here"),
@@ -424,7 +424,7 @@ class IngestStreamingSpec extends SparkSuite {
     val bench = Seq((100L, "the secret benchmark question about rivers"))
       .toDF("doc_id", "text")
     val bloom = TextAnalysis.benchGramBloom(bench, "text", lit(true), n = 5)
-    val dir = Files.createTempDirectory("graft_stream_decontam").toString
+    val dir = tempDir("graft_stream_decontam")
     val df = Seq(
       (1L, "a perfectly ordinary training document"),
       // shares a 5-gram run with the bench doc -> must flag
@@ -448,7 +448,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("mapGroupsWithState carries per-user counts across micro-batches (§2.11)") {
-    val dir = Files.createTempDirectory("graft_state").toString
+    val dir = tempDir("graft_state")
     Seq((7L, 1.0), (7L, 2.0), (9L, 3.0)).toDF("user_id", "value")
       .coalesce(1).write.parquet(s"$dir/f1")
     Seq((7L, 4.0), (9L, 5.0), (9L, 6.0)).toDF("user_id", "value")
@@ -476,7 +476,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("transformWithState running counts match mapGroupsWithState (RocksDB store)") {
-    val dir = Files.createTempDirectory("graft_tws").toString
+    val dir = tempDir("graft_tws")
     Seq((7L, 1.0), (7L, 2.0), (9L, 3.0)).toDF("user_id", "value")
       .coalesce(1).write.parquet(s"$dir/f1")
     Seq((7L, 4.0), (9L, 5.0), (9L, 6.0)).toDF("user_id", "value")
@@ -547,7 +547,7 @@ class IngestStreamingSpec extends SparkSuite {
       (3L, ts(50), "view"),                     // enters at stage 1
       (4L, ts(10), "purchase"),                 // never views: absent
       (5L, ts(0), "view"))                      // moves t1 to 0: click at 1050 > 1000 now misses
-    val dir = Files.createTempDirectory("graft_funnel_stream").toString + "/in"
+    val dir = tempDir("graft_funnel_stream") + "/in"
     new java.io.File(dir).mkdirs()
     batch1.toDF("user_id", "ts", "event_type").coalesce(1)
       .write.parquet(s"$dir/../f1")
@@ -616,7 +616,7 @@ class IngestStreamingSpec extends SparkSuite {
     // would convert them (view 100 -> click 200, inside the window); with
     // the TTL the orphan click is evicted and they re-enter at stage 1.
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val dir = Files.createTempDirectory("graft_funnel_ttl").toString + "/in"
+    val dir = tempDir("graft_funnel_ttl") + "/in"
     new java.io.File(dir).mkdirs()
     def writeBatch(name: String, rows: Seq[(Long, java.sql.Timestamp, String)]): Unit = {
       val tmp = s"$dir/../$name"
@@ -671,7 +671,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("runningUserCounts survives null user ids (drops them)") {
-    val dir = Files.createTempDirectory("graft_nullkey").toString + "/data"
+    val dir = tempDir("graft_nullkey") + "/data"
     Seq(Some(7L), None, Some(7L)).toDF("user_id")
       .coalesce(1).write.parquet(dir)
     val stream = EventStreams.readFileStream(spark, dir,
@@ -682,7 +682,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("flatMapGroupsWithState sessionizer closes sessions on gaps (§2.11)") {
-    val root = Files.createTempDirectory("graft_sess").toString
+    val root = tempDir("graft_sess")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     // file 1: user 7 has two sessions separated by a 80-min gap
@@ -720,7 +720,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("sessionizer extends bounds on allowed-late events, never end < start") {
-    val root = Files.createTempDirectory("graft_sess_late").toString
+    val root = tempDir("graft_sess_late")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     def write(f: String, mtime: Long, rows: (Long, String)*): Unit = {
@@ -756,7 +756,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("sessionizer gap math and emitted bounds are µs-exact") {
-    val root = Files.createTempDirectory("graft_sess_us").toString
+    val root = tempDir("graft_sess_us")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     def write(f: String, mtime: Long, rows: (Long, String)*): Unit = {
@@ -827,7 +827,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("CSV round-trip: write chunks, re-read typed, values survive (S1/K1)") {
-    val dir = Files.createTempDirectory("graft_csvrt").toString
+    val dir = tempDir("graft_csvrt")
     val orig = spark.read.parquet(s"$sf/customer.parquet")
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     graft.operators.Batching.writeCsvChunks(orig, dir, maxRecordsPerFile = 40)
@@ -850,7 +850,7 @@ class IngestStreamingSpec extends SparkSuite {
   }
 
   test("incrementalDedupStream: re-crawls drop across micro-batches; state survives restart") {
-    val root = Files.createTempDirectory("graft_incdedup").toString
+    val root = tempDir("graft_incdedup")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     // wave 1 (two micro-batches): f1 = two fresh docs; f2 = a re-crawl of
@@ -930,7 +930,7 @@ class IngestStreamingSpec extends SparkSuite {
     val v1 = Seq(1.0, 0.5, -0.25, 1.0, 0.75, -0.5, 0.3, 1.1)
     val v2 = v1.map(_ * 1.001) // near-dup of v1, same bucket
     val v3 = v1.map(x => -x)   // cosine -1: never a dup
-    val root = Files.createTempDirectory("graft_semdedup").toString
+    val root = tempDir("graft_semdedup")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     // batch 1: the LATER id (5) of the dup pair arrives first, plus 9
@@ -982,7 +982,7 @@ class IngestStreamingSpec extends SparkSuite {
     val v1 = Seq(1.0, 0.5, -0.25, 1.0, 0.75, -0.5, 0.3, 1.1)
     val v2 = v1.map(_ * 1.001) // near-dup: same plane signs in EVERY band
     val v3 = v1.map(x => -x)   // cosine -1: never a dup
-    val root = Files.createTempDirectory("graft_semdedup_banded").toString
+    val root = tempDir("graft_semdedup_banded")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     Seq((5L, v2), (9L, v3)).toDF("vec_id", "embedding")
@@ -1042,7 +1042,7 @@ class IngestStreamingSpec extends SparkSuite {
     val union = Seq((1L, v1), (5L, v2), (9L, v3)).toDF("vec_id", "embedding")
     val books = graft.operators.Similarity.fitPqCodebooks(
       union, m = 2, ksub = 4, iterations = 2)
-    val root = Files.createTempDirectory("graft_semdedup_pq").toString
+    val root = tempDir("graft_semdedup_pq")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     Seq((5L, v2), (9L, v3)).toDF("vec_id", "embedding")
@@ -1113,7 +1113,7 @@ class IngestStreamingSpec extends SparkSuite {
     val v9 = shift(b1.map(-_))  // centered cosine -1: never a dup
     val union = Seq((1L, v1), (5L, v5), (9L, v9)).toDF("vec_id", "embedding")
     val mu = graft.operators.Similarity.fitMeanVector(union)
-    val root = Files.createTempDirectory("graft_semdedup_centered").toString
+    val root = tempDir("graft_semdedup_centered")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     Seq((5L, v5), (9L, v9)).toDF("vec_id", "embedding")
@@ -1173,7 +1173,7 @@ class IngestStreamingSpec extends SparkSuite {
       union.select(col("vec_id"),
         graft.operators.Similarity.centerVectors(col("embedding"), mu).as("embedding")),
       m = 2, ksub = 4, iterations = 2)
-    val root = Files.createTempDirectory("graft_semdedup_meanparam").toString
+    val root = tempDir("graft_semdedup_meanparam")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     Seq((5L, v5), (9L, v9)).toDF("vec_id", "embedding")
@@ -1248,7 +1248,7 @@ class IngestStreamingSpec extends SparkSuite {
     // the collision (centering by zero preserves every bucket key), so
     // the trip is deterministic.
     val v1 = Seq(1.0, 0.5, -0.25, 1.0, 0.75, -0.5, 0.3, 1.1)
-    val root = Files.createTempDirectory("graft_semdedup_marker").toString
+    val root = tempDir("graft_semdedup_marker")
     val dir = s"$root/in"
     val ckpt = s"$root/ckpt"
     new java.io.File(dir).mkdirs()
@@ -1345,7 +1345,7 @@ class IngestStreamingSpec extends SparkSuite {
     val textA2 = textA + " tonight" // near-dup: 2 new shingles of ~20
     val textB = "completely unrelated payload about sbt builds parquet row " +
       "groups catalyst codegen and shuffle partitions in local mode"
-    val root = Files.createTempDirectory("graft_fuzzydedup_stream").toString
+    val root = tempDir("graft_fuzzydedup_stream")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     // batch 1: the LATER id (5) of the near-dup pair arrives first, plus 9
@@ -1524,7 +1524,7 @@ class IngestStreamingSpec extends SparkSuite {
     val h1 = 0x0123456789ABCDEFL
     val h2 = h1 ^ 0x5L          // hamming 2: a re-encode of the same image
     val h3 = ~h1                // hamming 64: unrelated
-    val root = Files.createTempDirectory("graft_hamdedup_stream").toString
+    val root = tempDir("graft_hamdedup_stream")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     Seq((5L, h2), (9L, h3)).toDF("doc_id", "h")
@@ -1584,7 +1584,7 @@ class IngestStreamingSpec extends SparkSuite {
     // batch twin, seeing all vectors, would drop it)
     val v1 = Seq(1.0, 0.5, -0.25, 1.0, 0.75, -0.5, 0.3, 1.1)
     val v2 = v1.map(_ * 1.001) // near-dup of v1, same bucket
-    val root = Files.createTempDirectory("graft_semdedup_ttl").toString
+    val root = tempDir("graft_semdedup_ttl")
     val dir = s"$root/in"
     new java.io.File(dir).mkdirs()
     def writeBatch(name: String, rows: Seq[(Long, Seq[Double])]): Unit = {

@@ -33,12 +33,11 @@ class PlanPostureSpec extends SparkSuite {
       s"column pruning missed the scan:\n$scan")
   }
 
-  test("standardScale applies stats by broadcast, never shuffling the fact side") {
+  test("standardScale's apply is a projection: no join, no exchange on the fact side") {
     val plan = executedPlan(graft.operators.Encode.standardScale(
       graft.meta.Tables.customer(spark, sf), Seq("c_acctbal")))
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      s"stats apply is not a broadcast join:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"fact side shuffled for a 1-row fit:\n$plan")
+    assert(!plan.contains("Join"), s"a one-row fit is applied by a join:\n$plan")
+    assert(!plan.contains("Exchange"), s"the fact side is exchanged for a one-row fit:\n$plan")
   }
 
   test("labelEncode mapping joins as broadcast hash join on the fact side") {
@@ -104,6 +103,13 @@ class PlanPostureSpec extends SparkSuite {
     // adaptive plans print Final + Initial sections — count the final only
     "Exchange hashpartitioning".r
       .findAllIn(plan.split("== Initial Plan ==").head).size
+
+  test("q72 chain: no sort-merge or nested-loop join, one hash exchange for the fill") {
+    val plan = executedPlan(SparkEntry.queries("q72_osv5m_clean")(spark, sf))
+    assert(!plan.contains("SortMergeJoin"), s"the chain shuffles a join:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin"), s"the chain cross-joins a fit:\n$plan")
+    assert(shuffleCount(plan) === 1, s"the fill should shuffle once on the chunk id:\n$plan")
+  }
 
   test("funnel plans ONE user exchange for all stage windows + the collapse agg (q85 shape)") {
     // The Behavior.scala claim: every stage is a Window over the SAME user

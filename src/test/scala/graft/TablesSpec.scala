@@ -19,7 +19,7 @@ class TablesSpec extends SparkSuite {
 
   /** Write `df` as `events.parquet` under a fresh temp dir, return the dir. */
   private def stage(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft_tables_spec").toString
+    val dir = tempDir("graft_tables_spec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
   }
@@ -50,7 +50,7 @@ class TablesSpec extends SparkSuite {
     val nanos = 1709296496L * 1000000000L + 789000000L // 2024-03-01T12:34:56.789 UTC
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
-    val dir = Files.createTempDirectory("graft_tables_spec").toString
+    val dir = tempDir("graft_tables_spec")
     val writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
       .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
@@ -111,7 +111,7 @@ class TablesSpec extends SparkSuite {
 
   /** Write `df` as `<name>.parquet` under a fresh temp dir, return the dir. */
   private def stageAs(name: String, df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft_tables_spec").toString
+    val dir = tempDir("graft_tables_spec")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     dir
   }
@@ -163,7 +163,7 @@ class TablesSpec extends SparkSuite {
 
   test("Compaction: many tiny files -> few target-size files, content-identical") {
     import graft.sources.Compaction
-    val root = Files.createTempDirectory("graft_compaction").toString
+    val root = tempDir("graft_compaction")
     val in = s"$root/in"
     // 40 tiny files of 500 rows each
     spark.range(20000).selectExpr("id", "id * 2 AS v")
@@ -199,7 +199,7 @@ class TablesSpec extends SparkSuite {
   test("SplitLayout: small and multi-file inputs pass through untouched") {
     import graft.sources.SplitLayout
     // a sub-threshold single file stays monolithic
-    val dir = Files.createTempDirectory("graft_split_spec").toFile
+    val dir = new java.io.File(tempDir("graft_split_spec"))
     val small = new java.io.File(dir, "small.parquet")
     spark.range(10).coalesce(1).write.parquet(small.getPath + ".d")
     // (a directory — i.e. any multi-file layout — is never rewritten)
@@ -211,7 +211,7 @@ class TablesSpec extends SparkSuite {
   /** ~200 KB single parquet file (above SplitLayout's 128 KB threshold),
     * written by one task into a fresh temp dir. */
   private def bigMonolithic(prefix: String): java.io.File = {
-    val dir = Files.createTempDirectory(prefix).toFile
+    val dir = new java.io.File(tempDir(prefix))
     val src = new java.io.File(dir, "big.parquet")
     val df = spark.range(20000).selectExpr("id", "repeat('x', id % 37) AS pad",
       "CAST(id * 1.5 AS DOUBLE) AS v")
@@ -227,6 +227,7 @@ class TablesSpec extends SparkSuite {
     import graft.sources.SplitLayout
     val src = bigMonolithic("graft_split_spec2")
     val norm = SplitLayout.normalized(spark, src.getPath)
+    deleteAfterTest(new java.io.File(norm)) // the split cache under java.io.tmpdir
     assert(norm != src.getPath, "big monolithic file must be rewritten")
     val files = new java.io.File(norm).listFiles().count(_.getName.endsWith(".parquet"))
     assert(files > 1, s"rewrite produced $files file(s), expected a split layout")
@@ -247,7 +248,7 @@ class TablesSpec extends SparkSuite {
     // writer's file count would fix every later run's scan width
     assert(SplitLayout.cacheDir(src.getPath, 4) != SplitLayout.cacheDir(src.getPath, 32))
     val files = spark.sparkContext.defaultParallelism.max(2)
-    assert(SplitLayout.normalized(spark, src.getPath) ==
-      SplitLayout.cacheDir(src.getPath, files).getPath)
+    val cache = deleteAfterTest(SplitLayout.cacheDir(src.getPath, files))
+    assert(SplitLayout.normalized(spark, src.getPath) == cache)
   }
 }
