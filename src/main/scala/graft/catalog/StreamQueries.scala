@@ -124,7 +124,7 @@ private[graft] object StreamQueries {
     // the est-Jaccard >= tau comparison both do real work): wave 1 is a
     // re-crawl (ids +1e6, one token mutated) arriving FIRST, wave 2 the
     // originals — so every wave-1 keeper must be retroactively flipped by
-    // a smaller-id original through the Update-mode re-emission, and the
+    // a smaller-id original through an Update-mode flip row, and the
     // reader contract (LAST row per (bucket, id), AND over an id's
     // buckets) must land on exactly the batch keep-first answer. The
     // fixture ([[fuzzyScrubDocs]]) is a 24-cluster corpus whose MinHash
@@ -177,7 +177,7 @@ private[graft] object StreamQueries {
     // retroactive-flip replay on NEAR-DUP vectors: wave 1 is a re-crawl
     // (ids +1e6, perturbed copies) arriving FIRST, wave 2 the originals —
     // every wave-1 keeper must be flipped by a smaller-id original
-    // through the Update-mode re-emission, and the reader contract (LAST
+    // through an Update-mode flip row, and the reader contract (LAST
     // row per (bucket, vec_id), kept only; a vector lives in exactly ONE
     // hyperplane bucket so no cross-bucket AND is needed) must land on
     // the batch keep-first answer. The fixture ([[semanticScrubVecs]])

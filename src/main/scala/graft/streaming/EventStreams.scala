@@ -1,9 +1,11 @@
 package graft.streaming
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 
 /** Structured Streaming operators (SURVEY §2.11).
   *
@@ -277,13 +279,14 @@ object EventStreams {
     * vec_id is its current status.
     *
     * EXACT batch parity under any arrival order, the [[funnelStream]]
-    * philosophy: state per bucket is every (id, vector) seen, and each
-    * micro-batch re-runs the keep-first recurrence over the union — so a
+    * philosophy: state per bucket is every (id, vector) seen, so a
     * smaller-id near-dup arriving micro-batches LATE retroactively flips
     * the earlier arrival to `kept = false` (batch drops x on any earlier-id
     * neighbor, surviving or not, so dropped vectors still stay in state as
-    * future droppers). Every touched bucket re-emits all its statuses;
-    * readers keep the last row per id.
+    * future droppers). Each micro-batch emits a verdict for every vector
+    * new to its bucket, plus one `kept = false` row per stored vector that
+    * a new smaller-id neighbor now drops ([[KeepFirstInBucket]]); readers
+    * keep the last row per id.
     *
     * Scale shape: the bucket is computed BEFORE the stateful shuffle (a
     * narrow projection of the same deterministic hyperplane bits as the
@@ -293,10 +296,12 @@ object EventStreams {
     * planes, the opt-in `ttl` (a [[org.apache.spark.sql.streaming.TTLConfig]]
     * on the seen-vector state, same batch-parity trade and
     * processing-time-mode consequence as [[funnelStream]]'s: an evicted
-    * vector can no longer drop later arrivals the batch twin would), or
-    * periodic restarts. Null ids/vectors are dropped pre-shuffle (same
-    * checkpoint-replay guard as [[funnelStream]]). Requires the RocksDB
-    * state store provider, like every `transformWithState` operator here.
+    * vector can no longer drop later arrivals the batch twin would; each
+    * vector expires `ttl` after it was stored, however often its bucket
+    * is touched later), or periodic restarts. Null ids/vectors are dropped
+    * pre-shuffle (same checkpoint-replay guard as [[funnelStream]]).
+    * Requires the RocksDB state store provider, like every
+    * `transformWithState` operator here.
     *
     * PQ-CODES-IN-STATE (`pqBooks`): at 100 TB the binding resource of
     * this rung is ListState bytes (measured ~345–440 B/doc for raw 48-dim
@@ -325,8 +330,9 @@ object EventStreams {
     * direction pins plane signs and collapses streaming buckets exactly
     * as it collapses the batch twin's (BASELINE.md "Round-19:
     * mean-centering closes the LSH concentration hole") — and here the
-    * damage is worse, because the per-bucket recurrence is
-    * O(bucket-population²) EVERY micro-batch.
+    * damage is worse, because every new vector is compared with every
+    * vector stored in its bucket: O(bucket population x new vectors)
+    * per micro-batch.
     * A stream cannot fit a corpus-wide mean online, so center mode takes
     * a FITTED-MEAN SNAPSHOT: run [[graft.operators.Similarity
     * .fitMeanVector]] on a reference snapshot of the same embedding
@@ -359,9 +365,10 @@ object EventStreams {
 
   /** Shared pre-shuffle projection of the two semantic rungs: key the
     * rows by `key` (a single bucket or an exploded band array), guard
-    * nulls, and route to the raw or PQ core. ONE definition so the
-    * null-guard set and key derivation can never desynchronize between
-    * the raw and PQ paths — the parity the `pqBooks` scaladoc promises.
+    * nulls, and run [[KeepFirstInBucket]] on raw vectors or PQ codes.
+    * ONE definition so the null-guard set and key derivation can never
+    * desynchronize between the raw and PQ paths — the parity the
+    * `pqBooks` scaladoc promises.
     *
     * CHECKPOINT COMPATIBILITY: the bucket key derives from (nPlanes,
     * bands, the plane family, the centering `mean`) and the state VALUE
@@ -384,7 +391,7 @@ object EventStreams {
       ttl: Option[java.time.Duration],
       pqBooks: Option[DataFrame],
       mean: Option[Seq[Double]],
-      configTag: String): org.apache.spark.sql.Dataset[(Long, Long, Boolean)] = {
+      configTag: String): Dataset[(Long, Long, Boolean)] = {
     val spark = vectors.sparkSession
     import spark.implicits._
     // center BEFORE the key projection and the PQ encode: buckets, state,
@@ -406,29 +413,49 @@ object EventStreams {
       graft.operators.Similarity.collectPqCodebooks(df))
     def fp(xs: Iterable[Any]): String = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.orderedHash(xs).toLong & 0xffffffffL)
-    val tag = configTag +
+    val tag = Some(configTag +
       s";pq=${collected.fold("raw")(b =>
         "codes:" + fp(b.flatMap(_.flatMap(_.toSeq)).toSeq))}" +
-      s";mean=${mean.fold("none")(mu => fp(mu))}"
+      s";mean=${mean.fold("none")(mu => fp(mu))}")
+    val vec = col(vecCol).cast("array<double>")
+    def keyed(payload: org.apache.spark.sql.Column) = src
+      .select(key.as("_b"), col(idCol).cast("long").as("_id"), payload.as("_p"))
+      .where(col("_b").isNotNull && col("_id").isNotNull && col("_p").isNotNull)
     collected match {
       case Some(books) =>
-        semanticDedupCorePq(
-          src
-            .select(key.as("_b"), col(idCol).cast("long").as("_id"),
-              graft.functions.GraftFunctions.pq_encode(
-                col(vecCol).cast("array<double>"),
-                books.map(_.map(_.toSeq).toSeq).toSeq).as("_c"))
-            .where(col("_b").isNotNull && col("_id").isNotNull && col("_c").isNotNull)
-            .as[(Long, Long, Seq[Int])],
-          threshold, ttl, books, tag)
+        val m = books.length
+        val dsub = books(0)(0).length
+        require(books.forall(_.forall(_.length == dsub)),
+          "semanticDedupStream(pqBooks): ragged codebooks — subspace centroid widths differ")
+        def decode(codes: Seq[Int]): Seq[Double] = {
+          require(codes.length == m,
+            s"pq state decode: ${codes.length} codes for $m subspaces — state written with different books?")
+          val out = new Array[Double](m * dsub)
+          var j = 0
+          while (j < m) {
+            val c = codes(j)
+            require(c >= 0 && c < books(j).length,
+              s"pq state decode: code $c out of range for subspace $j (k=${books(j).length})")
+            System.arraycopy(books(j)(c), 0, out, j * dsub, dsub)
+            j += 1
+          }
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+        }
+        // decode each entry once per micro-batch; the recurrence is the
+        // raw rung's, in reconstructed space
+        keepFirstInBucket(
+          keyed(graft.functions.GraftFunctions.pq_encode(vec,
+            books.map(_.map(_.toSeq).toSeq).toSeq)).as[(Long, Long, Seq[Int])],
+          "seen_codes", Encoders.product[(Long, Seq[Int])], ttl, tag,
+          (codes: Array[Seq[Int]]) => {
+            val vs = codes.map(decode)
+            (a: Int, b: Int) => semanticCos(vs(a), vs(b)) > threshold
+          })
       case None =>
-        semanticDedupCore(
-          src
-            .select(key.as("_b"), col(idCol).cast("long").as("_id"),
-              col(vecCol).cast("array<double>").as("_v"))
-            .where(col("_b").isNotNull && col("_id").isNotNull && col("_v").isNotNull)
-            .as[(Long, Long, Seq[Double])],
-          threshold, ttl, tag)
+        keepFirstInBucket(keyed(vec).as[(Long, Long, Seq[Double])],
+          "seen_vectors", Encoders.product[(Long, Seq[Double])], ttl, tag,
+          (vs: Array[Seq[Double]]) =>
+            (a: Int, b: Int) => semanticCos(vs(a), vs(b)) > threshold)
     }
   }
 
@@ -442,15 +469,17 @@ object EventStreams {
     * over its `bands` buckets: dropped iff ANY band found an earlier-id
     * neighbor above `threshold`, the batch operator's rule. State carries
     * the full vector once per band (`bands` x the single-band ~440 B/doc
-    * line in BASELINE.md) — the recall-for-state trade, priced.
+    * line in BASELINE.md) — the recall-for-state trade, priced. `ttl` is
+    * the single rung's: each (band bucket, vector) entry expires `ttl`
+    * after it was stored, not after its bucket's last touch.
     *
     * SIZING: `nPlanes` is PER BAND and must be chosen exactly like the
     * single rung's — bands multiply state and recall, they do not
     * substitute for planes. Shrinking per-band planes to hold the total
-    * constant re-creates the small-bucket regime where the per-batch
-    * O(bucket-population^2) recurrence explodes (measured: a 2x4 split
-    * on 64k docs ran 50-100 s/batch vs 2x8's ~13 s — 16 buckets/band
-    * put ~4k vectors in every ListState). The default (8 planes x 2
+    * constant re-creates the few-bucket regime where every new vector is
+    * compared with a large bucket: O(bucket population x new vectors)
+    * per micro-batch, and a 2x4 split on 64k docs puts ~4k vectors in
+    * every ListState (16 buckets/band). The default (8 planes x 2
     * bands) matches the batch twin's, so default-vs-default stream/batch
     * calls stay parity-consistent.
     *
@@ -479,61 +508,79 @@ object EventStreams {
       .toDF("bucket", idCol, "kept_in_bucket")
   }
 
-  /** Shared state machinery of the two semantic rungs: per bucket key,
-    * retain every (id, vector) seen, re-run the keep-first recurrence over
-    * the union each micro-batch, and re-emit the whole touched bucket
-    * (Update mode — late smaller-id originals retroactively flip earlier
-    * survivors). */
-  private def semanticDedupCore(
-      keyed: org.apache.spark.sql.Dataset[(Long, Long, Seq[Double])],
-      threshold: Double,
-      ttl: Option[java.time.Duration],
-      configTag: String): org.apache.spark.sql.Dataset[(Long, Long, Boolean)] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    val ttlConfig = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-    val cos = semanticCos _
-
-    class DedupProcessor extends StatefulProcessor[Long, (Long, Long, Seq[Double]), (Long, Long, Boolean)] {
-      @transient private var seen: ListState[(Long, Seq[Double])] = _
-      @transient private var cfg: org.apache.spark.sql.streaming.ValueState[String] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-        seen = getHandle.getListState[(Long, Seq[Double])]("seen_vectors",
-          Encoders.product[(Long, Seq[Double])], ttlConfig)
-        // the config marker must NEVER expire before the vectors it
-        // describes, so it takes no TTL
-        cfg = getHandle.getValueState[String]("op_config", Encoders.STRING,
-          TTLConfig.NONE)
-      }
-      override def handleInputRows(bucket: Long, rows: Iterator[(Long, Long, Seq[Double])],
-          tv: TimerValues): Iterator[(Long, Long, Boolean)] = {
-        checkConfigMarker(cfg, configTag, bucket)
-        val incoming = rows.map { case (_, id, v) => (id, v) }.toArray
-        if (incoming.isEmpty) return Iterator.empty
-        val all = (seen.get().toArray ++ incoming)
-          .groupBy(_._1).map(_._2.head).toArray.sortBy(_._1)
-        seen.clear()
-        seen.put(all)
-        // keep-first recurrence over the union: x is dropped iff ANY
-        // earlier-id vector (kept or dropped) clears the threshold
-        val out = all.indices.map { i =>
-          val (id, v) = all(i)
-          val dropped = (0 until i).exists { j => cos(all(j)._2, v) > threshold }
-          (bucket, id, !dropped)
-        }
-        out.iterator
-      }
+  /** The four near-dup gates' one state machine: keep-first within a
+    * bucket, where an id is dropped iff a SMALLER id in its bucket is
+    * `near` it (kept or dropped itself). State per bucket is every
+    * (id, value) stored, in the ListState `stateName`. Per touch:
+    *   - `marker`, when set, is checked ([[checkConfigMarker]]);
+    *   - ids already stored, and repeats of one id in the micro-batch,
+    *     are ignored (the first row wins);
+    *   - the new entries are appended, never rewriting stored ones;
+    *   - each new id is emitted kept iff no smaller id in the bucket is
+    *     near it, and each stored id that a new smaller id is near is
+    *     emitted again, as dropped.
+    * Keep-first is monotone — a verdict depends only on smaller ids, so
+    * the one possible change is kept -> dropped — and the last row per
+    * (bucket, id) equals the recurrence over everything stored. A touch
+    * costs O(bucket population x new ids) comparisons and writes only
+    * the new entries. `near(values)` is built once per touch over the
+    * bucket's stored-then-new values and takes two of their indices,
+    * the smaller id first. */
+  private class KeepFirstInBucket[K, V: ClassTag](stateName: String,
+      valueEncoder: Encoder[(Long, V)], ttl: Option[java.time.Duration],
+      marker: Option[String], near: Array[V] => (Int, Int) => Boolean)
+      extends StatefulProcessor[K, (Long, V), (K, Long, Boolean)] {
+    @transient private var seen: ListState[(Long, V)] = _
+    @transient private var cfg: ValueState[String] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      seen = getHandle.getListState(stateName, valueEncoder,
+        ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE))
+      // the config marker must NEVER expire before the entries it
+      // describes, so it takes no TTL
+      if (marker.isDefined)
+        cfg = getHandle.getValueState[String]("op_config", Encoders.STRING, TTLConfig.NONE)
     }
+    override def handleInputRows(bucket: K, rows: Iterator[(Long, V)],
+        tv: TimerValues): Iterator[(K, Long, Boolean)] = {
+      marker.foreach(checkConfigMarker(cfg, _, bucket))
+      val stored = seen.get().toArray
+      val ids = scala.collection.mutable.HashSet.from(stored.iterator.map(_._1))
+      val fresh = rows.filter(r => ids.add(r._1)).toArray
+      if (fresh.isEmpty) return Iterator.empty
+      seen.appendList(fresh)
+      val all = stored ++ fresh
+      val isNear = near(all.map(_._2))
+      val n = stored.length
+      val verdicts = fresh.indices.iterator.map { f =>
+        val id = fresh(f)._1
+        (bucket, id, !all.indices.exists(j => all(j)._1 < id && isNear(j, n + f)))
+      }
+      val flips = stored.indices.iterator.filter { s =>
+        fresh.indices.exists(f => fresh(f)._1 < stored(s)._1 && isNear(n + f, s))
+      }.map(s => (bucket, stored(s)._1, false))
+      verdicts ++ flips
+    }
+  }
 
-    keyed
-      .groupByKey(_._1)
-      // enabled TTL forces processing-time mode, like funnelStream
-      .transformWithState(new DedupProcessor,
+  /** Runs [[KeepFirstInBucket]] over `(bucket, id, value)` rows. The
+    * bucket leaves the value side before the stateful exchange: the
+    * processor reads it from the key argument, and groupByKey already
+    * appends a key column to the exchange — carrying it twice would ship
+    * every bucket two times per row (caught by PlanPostureSpec's
+    * streaming pin). An enabled TTL forces processing-time mode, like
+    * [[funnelStream]]. */
+  private def keepFirstInBucket[K, V](keyed: Dataset[(K, Long, V)],
+      stateName: String, valueEncoder: Encoder[(Long, V)],
+      ttl: Option[java.time.Duration], marker: Option[String],
+      near: Array[V] => (Int, Int) => Boolean)(implicit
+      keyEncoder: Encoder[K], outEncoder: Encoder[(K, Long, Boolean)],
+      vTag: ClassTag[V]): Dataset[(K, Long, Boolean)] =
+    keyed.groupByKey(_._1)(keyEncoder)
+      .mapValues(t => (t._2, t._3))(valueEncoder)
+      .transformWithState(
+        new KeepFirstInBucket[K, V](stateName, valueEncoder, ttl, marker, near),
         if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
         OutputMode.Update())
-  }
 
   /** The semantic rungs' checkpoint-config tripwire (see
     * [[semanticKeyed]]'s CHECKPOINT COMPATIBILITY note): written on a
@@ -541,8 +588,8 @@ object EventStreams {
     * stream whose key-affecting config (planes/bands/pq-mode/centering
     * mean) changed fails loudly on the first cross-config key collision
     * instead of silently re-admitting previously-seen duplicates. */
-  private def checkConfigMarker(cfg: org.apache.spark.sql.streaming.ValueState[String],
-                                configTag: String, bucket: Long): Unit = {
+  private def checkConfigMarker(cfg: ValueState[String],
+                                configTag: String, bucket: Any): Unit = {
     if (cfg.exists()) {
       val prior = cfg.get()
       if (prior != configTag)
@@ -557,87 +604,12 @@ object EventStreams {
   /** Sequential double dot/norms over the min span — the CosineSimilarity
     * kernel's exact arithmetic (incl. its malformed-pair convention), so
     * stream and batch agree on threshold boundaries. Shared by the raw and
-    * PQ semantic cores. */
+    * PQ semantic rungs. */
   private def semanticCos(a: Seq[Double], b: Seq[Double]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  /** [[semanticDedupCore]]'s PQ-codes-in-state variant: state per bucket
-    * is every (id, m-int PQ code) seen — m ints instead of dims doubles,
-    * the ListState compression [[semanticDedupStream]]'s `pqBooks`
-    * documents — and each micro-batch decodes the union (m codebook
-    * lookups per entry) and re-runs the keep-first recurrence on the
-    * reconstructed vectors. Decisions are a pure function of codes, so
-    * re-emission stays batch-to-batch stable under any arrival order. */
-  private def semanticDedupCorePq(
-      keyed: org.apache.spark.sql.Dataset[(Long, Long, Seq[Int])],
-      threshold: Double,
-      ttl: Option[java.time.Duration],
-      books: Array[Array[Array[Double]]],
-      configTag: String): org.apache.spark.sql.Dataset[(Long, Long, Boolean)] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    val ttlConfig = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-    val m = books.length
-    val dsub = books(0)(0).length
-    require(books.forall(_.forall(_.length == dsub)),
-      "semanticDedupCorePq: ragged codebooks — subspace centroid widths differ")
-
-    def decode(codes: Seq[Int]): Seq[Double] = {
-      require(codes.length == m,
-        s"pq state decode: ${codes.length} codes for $m subspaces — state written with different books?")
-      val out = new Array[Double](m * dsub)
-      var j = 0
-      while (j < m) {
-        val c = codes(j)
-        require(c >= 0 && c < books(j).length,
-          s"pq state decode: code $c out of range for subspace $j (k=${books(j).length})")
-        System.arraycopy(books(j)(c), 0, out, j * dsub, dsub)
-        j += 1
-      }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-    }
-
-    class PqDedupProcessor extends StatefulProcessor[Long, (Long, Long, Seq[Int]), (Long, Long, Boolean)] {
-      @transient private var seen: ListState[(Long, Seq[Int])] = _
-      @transient private var cfg: org.apache.spark.sql.streaming.ValueState[String] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-        seen = getHandle.getListState[(Long, Seq[Int])]("seen_codes",
-          Encoders.product[(Long, Seq[Int])], ttlConfig)
-        cfg = getHandle.getValueState[String]("op_config", Encoders.STRING,
-          TTLConfig.NONE)
-      }
-      override def handleInputRows(bucket: Long, rows: Iterator[(Long, Long, Seq[Int])],
-          tv: TimerValues): Iterator[(Long, Long, Boolean)] = {
-        checkConfigMarker(cfg, configTag, bucket)
-        val incoming = rows.map { case (_, id, c) => (id, c) }.toArray
-        if (incoming.isEmpty) return Iterator.empty
-        val all = (seen.get().toArray ++ incoming)
-          .groupBy(_._1).map(_._2.head).toArray.sortBy(_._1)
-        seen.clear()
-        seen.put(all)
-        // decode once per entry per batch; the recurrence itself is the
-        // raw core's, in reconstructed space
-        val vecs = all.map { case (_, c) => decode(c) }
-        val out = all.indices.map { i =>
-          val dropped = (0 until i).exists { j =>
-            semanticCos(vecs(j), vecs(i)) > threshold }
-          (bucket, all(i)._1, !dropped)
-        }
-        out.iterator
-      }
-    }
-
-    keyed
-      .groupByKey(_._1)
-      .transformWithState(new PqDedupProcessor,
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Update())
   }
 
   /** Streaming fuzzy-TEXT near-dup scrub (MinHash-LSH banded,
@@ -664,8 +636,9 @@ object EventStreams {
     *
     * EXACT parity with that pairwise rule under any arrival order, the
     * [[semanticDedupStream]] philosophy: state per bucket is every
-    * (id, sig) ever seen there, each micro-batch re-runs the recurrence
-    * over the union and re-emits the whole touched bucket, so a smaller-id
+    * (id, sig) ever seen there; each micro-batch emits the verdicts of
+    * the docs new to a bucket plus a flip for each stored doc that a new
+    * smaller-id doc now drops ([[KeepFirstInBucket]]), so a smaller-id
     * original arriving late retroactively flips earlier survivors.
     * Emits `(bucket, idCol, kept_in_bucket)` in Update mode; readers keep
     * the LAST row per (bucket, id) and AND over the id's buckets — the
@@ -679,16 +652,15 @@ object EventStreams {
     * persists, and state growth matches that index's contract (seen docs x
     * LshBands) with the retained-droppers caveat the semantic twin
     * documents. `ttl` (opt-in, processing-time mode) bounds state at the
-    * same batch-parity cost. Requires the RocksDB state store provider. */
+    * same batch-parity cost; each entry expires `ttl` after it was
+    * stored, not after its bucket's last touch. Requires the RocksDB
+    * state store provider. */
   def fuzzyDedupStream(docs: DataFrame, tau: Double,
                        idCol: String = "doc_id", textCol: String = "text",
                        ttl: Option[java.time.Duration] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
     require(tau > 0 && tau <= 1, s"fuzzyDedupStream needs tau in (0, 1], got $tau")
     val spark = docs.sparkSession
     import spark.implicits._
-    val ttlConfig = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
     val k = graft.operators.Dedup.MinhashK
     val bands = graft.operators.Dedup.LshBands
     val rows = k / bands
@@ -703,47 +675,18 @@ object EventStreams {
       eq.toDouble / k
     }
 
-    class FuzzyProcessor extends StatefulProcessor[String, (Long, Seq[Long]), (String, Long, Boolean)] {
-      @transient private var seen: ListState[(Long, Seq[Long])] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        seen = getHandle.getListState[(Long, Seq[Long])]("seen_sigs",
-          Encoders.product[(Long, Seq[Long])], ttlConfig)
-      override def handleInputRows(bucket: String, rowsIt: Iterator[(Long, Seq[Long])],
-          tv: TimerValues): Iterator[(String, Long, Boolean)] = {
-        val incoming = rowsIt.toArray
-        if (incoming.isEmpty) return Iterator.empty
-        val all = (seen.get().toArray ++ incoming)
-          .groupBy(_._1).map(_._2.head).toArray.sortBy(_._1)
-        seen.clear()
-        seen.put(all)
-        // direct-neighbor keep-first over the union: dropped iff ANY
-        // earlier-id bucket-mate (kept or dropped) clears tau
-        all.indices.iterator.map { i =>
-          val (id, s) = all(i)
-          val dropped = (0 until i).exists(j => estJaccard(all(j)._2, s) >= tau)
-          (bucket, id, !dropped)
-        }
-      }
-    }
-
-    docs
-      .select(col(idCol).cast("long").as("_id"),
-        graft.functions.GraftFunctions.minhash_sig(col(textCol)).as("_sig"))
-      .where(col("_id").isNotNull && col("_sig").isNotNull)
-      .select(explode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> concat_ws('|', b, " +
-            s"concat_ws('-', slice(_sig, b * $rows + 1, $rows))))")).as("_bucket"),
-        col("_id"), col("_sig"))
-      .as[(String, Long, Seq[Long])]
-      .groupByKey(_._1)
-      // strip the bucket from the value side: the processor reads it from
-      // the key argument, and groupByKey already appends a key column to
-      // the exchange — carrying it twice would ship every bucket string
-      // two times per row (caught by PlanPostureSpec's streaming pin)
-      .mapValues(t => (t._2, t._3))
-      .transformWithState(new FuzzyProcessor,
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Update())
+    keepFirstInBucket(
+      docs
+        .select(col(idCol).cast("long").as("_id"),
+          graft.functions.GraftFunctions.minhash_sig(col(textCol)).as("_sig"))
+        .where(col("_id").isNotNull && col("_sig").isNotNull)
+        .select(explode(expr(
+            s"transform(sequence(0, ${bands - 1}), b -> concat_ws('|', b, " +
+              s"concat_ws('-', slice(_sig, b * $rows + 1, $rows))))")).as("_bucket"),
+          col("_id"), col("_sig"))
+        .as[(String, Long, Seq[Long])],
+      "seen_sigs", Encoders.product[(Long, Seq[Long])], ttl, None,
+      (sigs: Array[Seq[Long]]) => (a: Int, b: Int) => estJaccard(sigs(a), sigs(b)) >= tau)
       .toDF("bucket", idCol, "kept_in_bucket")
   }
 
@@ -767,8 +710,9 @@ object EventStreams {
     * CC-transform removals (transitive chains; equal on star families).
     *
     * EXACT parity under any arrival order (retroactive late-original
-    * flips, whole touched bucket re-emitted, Update mode; readers keep
-    * the LAST row per (bucket, id) and AND over an id's buckets).
+    * flips, emitted only for the stored items they drop, Update mode;
+    * readers keep the LAST row per (bucket, id) and AND over an id's
+    * buckets).
     *
     * Scale shape: the fingerprint is banded BEFORE the stateful shuffle —
     * the exchange carries (bucket, id, one long), the same fixed-width
@@ -779,55 +723,26 @@ object EventStreams {
   def hammingDedupStream(items: DataFrame, maxHamming: Int = 3,
                          idCol: String = "doc_id", hashCol: String = "h",
                          ttl: Option[java.time.Duration] = None): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
     require(maxHamming >= 0 && maxHamming < 4,
       s"pigeonhole needs maxHamming in [0, 3], got $maxHamming")
     val spark = items.sparkSession
     import spark.implicits._
-    val ttlConfig = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-
-    class HammingProcessor extends StatefulProcessor[Long, (Long, Long), (Long, Long, Boolean)] {
-      @transient private var seen: ListState[(Long, Long)] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        seen = getHandle.getListState[(Long, Long)]("seen_hashes",
-          Encoders.product[(Long, Long)], ttlConfig)
-      override def handleInputRows(bucket: Long, rowsIt: Iterator[(Long, Long)],
-          tv: TimerValues): Iterator[(Long, Long, Boolean)] = {
-        val incoming = rowsIt.toArray
-        if (incoming.isEmpty) return Iterator.empty
-        val all = (seen.get().toArray ++ incoming)
-          .groupBy(_._1).map(_._2.head).toArray.sortBy(_._1)
-        seen.clear()
-        seen.put(all)
-        all.indices.iterator.map { i =>
-          val (id, h) = all(i)
-          val dropped = (0 until i).exists(j =>
-            java.lang.Long.bitCount(all(j)._2 ^ h) <= maxHamming)
-          (bucket, id, !dropped)
-        }
-      }
-    }
-
     // bucket = (band << 16) | bkey — the hammingIndex64 banding packed
     // into one long key (band in [0,3], bkey 16 bits)
-    items
-      .select(col(idCol).cast("long").as("_id"),
-        col(hashCol).cast("long").as("_h"))
-      .where(col("_id").isNotNull && col("_h").isNotNull)
-      .select(explode(expr(
-          "transform(sequence(0, 3), b -> " +
-            "shiftleft(CAST(b AS BIGINT), 16) | (shiftright(_h, b * 16) & 65535))"))
-          .as("_bucket"),
-        col("_id"), col("_h"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      // same key-stripping as fuzzyDedupStream: the bucket rides the
-      // appended key column only
-      .mapValues(t => (t._2, t._3))
-      .transformWithState(new HammingProcessor,
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Update())
+    keepFirstInBucket(
+      items
+        .select(col(idCol).cast("long").as("_id"),
+          col(hashCol).cast("long").as("_h"))
+        .where(col("_id").isNotNull && col("_h").isNotNull)
+        .select(explode(expr(
+            "transform(sequence(0, 3), b -> " +
+              "shiftleft(CAST(b AS BIGINT), 16) | (shiftright(_h, b * 16) & 65535))"))
+            .as("_bucket"),
+          col("_id"), col("_h"))
+        .as[(Long, Long, Long)],
+      "seen_hashes", Encoders.product[(Long, Long)], ttl, None,
+      (hs: Array[Long]) =>
+        (a: Int, b: Int) => java.lang.Long.bitCount(hs(a) ^ hs(b)) <= maxHamming)
       .toDF("bucket", idCol, "kept_in_bucket")
   }
 

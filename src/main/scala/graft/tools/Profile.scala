@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * at least [[JobMinMs]] (with call site — driver loops such as CC rounds
   * and Lloyd fits hide their cost in many small jobs), the stages that took
   * at least [[StageMinMs]], and one line per streaming trigger with its
-  * duration breakdown. `explain` prints each query's formatted plan at the
+  * duration breakdown and its first state operator's `numRowsTotal` and
+  * `numRowsUpdated`. `explain` prints each query's formatted plan at the
   * end. sfDir defaults to SPARK_GRAFT_SF_DIR. To try a different conf, pass
   * `-Dspark.<key>=<value>` through SPARK_GRAFT_JAVA_OPTS. */
 object Profile {
@@ -55,10 +56,14 @@ object Profile {
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
         def d(k: String): Long = Option(p.durationMs.get(k)).map(_.longValue).getOrElse(-1L)
+        // state size of the first stateful operator (-1 when stateless)
+        val st = p.stateOperators.headOption
         lines.add(f"  trigger ${p.batchId}%3d rows=${p.numInputRows}%6d " +
           f"total=${d("triggerExecution")}%5d addBatch=${d("addBatch")}%5d " +
           f"latestOffset=${d("latestOffset")}%4d walCommit=${d("walCommit")}%4d " +
-          f"plan=${d("queryPlanning")}%4d commitOffsets=${d("commitOffsets")}%4d ms")
+          f"plan=${d("queryPlanning")}%4d commitOffsets=${d("commitOffsets")}%4d ms " +
+          f"stateRows=${st.fold(-1L)(_.numRowsTotal)}%d " +
+          f"stateUpdated=${st.fold(-1L)(_.numRowsUpdated)}%d")
       }
     })
 

@@ -118,7 +118,7 @@ class BatchingRelationalSpec extends SparkSuite {
   }
 
   test("writeChunked bounds records per file (K1/K3)") {
-    val dir = Files.createTempDirectory("graft_chunks").toString
+    val dir = tempDir("graft_chunks")
     Batching.writeChunked(nums.repartition(1), dir, 300)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length === 4) // 1000 rows / 300 per file in one partition
@@ -152,7 +152,7 @@ class BatchingRelationalSpec extends SparkSuite {
 
   test("writeJsonlShards: shard dirs in plan order, byte-identical re-runs") {
     val docs = (1L to 60L).map(i => (i, s"body of document $i")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDir("graft_jsonl")
     Batching.writeJsonlShards(docs, "doc_id", "text", nShards = 3, seed = 5L, dir)
     val shardDirs = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("shard=")).map(_.getName).sorted

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Clustering
@@ -54,7 +52,7 @@ class ClusteringSpec extends SparkSuite {
       (pmod(hash(col("id")), lit(1000)) + lit(1000)).cast("long").as("a"),
       (pmod(hash(col("id") * 7 + 3), lit(1000)) + lit(5000)).cast("long").as("b"),
       col("id"))
-    val base = Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder")
     val zDir = s"$base/z"
     val linDir = s"$base/lin"
     Clustering.zOrderWrite(df, Seq("a", "b"), bits = 8, zDir, nFiles = 16)
@@ -90,7 +88,7 @@ class ClusteringSpec extends SparkSuite {
         .as("user_id"),
       (pmod(hash(col("id") * 7 + 3), lit(1000)) + lit(5000)).cast("long").as("ts"),
       col("id"))
-    val base = Files.createTempDirectory("zorder_zipf").toString
+    val base = tempDir("zorder_zipf")
     val eqDir = s"$base/eq"
     val rkDir = s"$base/rk"
     Clustering.zOrderWrite(df, Seq("user_id", "ts"), bits = 8, eqDir, nFiles = 16)

@@ -1578,6 +1578,71 @@ class IngestStreamingSpec extends SparkSuite {
     }
   }
 
+  test("hammingDedupStream emits only new rows and flips: a late chain replays as deltas") {
+    // ids arrive 5, 3, 1 along a chain: 3 is near 5 and 1 is near 3 (3
+    // bits each), 1 and 5 are 6 bits apart. Each trigger emits the new id
+    // and the stored ids it drops, never a bucket's unchanged members, and
+    // a re-sent id that is already stored emits nothing.
+    import graft.operators.Dedup
+    val h5 = 0x0123456789ABCDEFL
+    val h3 = h5 ^ 0x7L
+    val h1 = h3 ^ 0x38L
+    val waves = Seq(Seq((5L, h5)), Seq((3L, h3)), Seq((1L, h1)), Seq((3L, h3)))
+    val root = tempDir("graft_hamdedup_delta")
+    val dir = s"$root/in"
+    new java.io.File(dir).mkdirs()
+    for ((rows, i) <- waves.zipWithIndex) {
+      rows.toDF("doc_id", "h").coalesce(1).write.parquet(s"$root/f$i")
+      for (p <- new java.io.File(s"$root/f$i").listFiles() if p.getName.endsWith(".parquet")) {
+        val dst = java.nio.file.Path.of(dir, s"f$i-${p.getName}")
+        Files.copy(p.toPath, dst)
+        dst.toFile.setLastModified((i + 1) * 1000000L)
+      }
+    }
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val schema = spark.read.parquet(dir).schema
+      val stream = EventStreams.readFileStream(spark, dir, schema, maxFilesPerTrigger = 1)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Boolean)]
+      val q = EventStreams.hammingDedupStream(stream, maxHamming = 3)
+        .writeStream.outputMode("update")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          val rows = batch.collect()
+          buf.synchronized {
+            rows.foreach(r => buf += ((id, r.getLong(0), r.getLong(1), r.getBoolean(2))))
+          }
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq ===
+        Seq(0L, 1L, 2L, 3L), "expected one wave per trigger")
+      def verdicts(batch: Long): Set[(Long, Boolean)] =
+        buf.filter(_._1 == batch).map(r => (r._3, r._4)).toSet
+      assert(verdicts(0) === Set((5L, true)))
+      assert(verdicts(1) === Set((3L, true), (5L, false)))
+      assert(verdicts(2) === Set((1L, true), (3L, false)),
+        s"trigger 3 must emit 1 kept and 3 dropped, and nothing for 5: ${buf.filter(_._1 == 2)}")
+      assert(verdicts(3).isEmpty, s"a re-sent stored id emitted ${buf.filter(_._1 == 3)}")
+      // reader contract: LAST row per (bucket, id), AND over buckets
+      val finals = buf.groupBy(r => (r._2, r._3)).values.map(_.maxBy(_._1))
+        .groupBy(_._3).map { case (id, xs) => id -> xs.forall(_._4) }
+      assert(finals === Map(1L -> true, 3L -> false, 5L -> false), s"got $finals")
+      val batchDropped = Dedup.hammingNearDupPairs64(
+          Seq((5L, h5), (3L, h3), (1L, h1)).toDF("doc_id", "h"), "doc_id", "h",
+          maxHamming = 3)
+        .select("id_b").as[Long].collect().toSet
+      assert(batchDropped === Set(3L, 5L))
+      assert(finals.filter(!_._2).keySet === batchDropped)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("semanticDedupStream TTL evicts stale vectors; late dups then survive (documented divergence)") {
     // the documented batch-parity trade: after the seen-vector state
     // expires, a later-id near-dup of an evicted vector is KEPT (the

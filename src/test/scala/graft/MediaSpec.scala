@@ -8,11 +8,13 @@ import javax.imageio.ImageIO
 
 import graft.operators.Media
 import graft.sources.Ingest
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Image ETL (FIXTURES.md §C): zip exploder, extension filter, decode-error
   * skip, resize-with-pad, micro-batch sink. */
-class MediaSpec extends SparkSuite {
+class MediaSpec extends SparkSuite with BeforeAndAfterAll {
 
   private def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
@@ -22,8 +24,16 @@ class MediaSpec extends SparkSuite {
     out.toByteArray
   }
 
+  // the suite-level archive dir, made on first use and deleted after the
+  // last test
+  private var zipMade: Option[String] = None
+  override def afterAll(): Unit =
+    try zipMade.foreach(d => FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
+
   private lazy val zipDir: String = {
     val dir = Files.createTempDirectory("graft_zip").toString
+    zipMade = Some(dir)
     val zos = new ZipOutputStream(new FileOutputStream(s"$dir/part_001.zip"))
     def put(name: String, bytes: Array[Byte]): Unit = {
       zos.putNextEntry(new ZipEntry(name)); zos.write(bytes); zos.closeEntry()
@@ -67,7 +77,7 @@ class MediaSpec extends SparkSuite {
   }
 
   test("tensor micro-batch sink bounds records per file (K3)") {
-    val out = Files.createTempDirectory("graft_tensors").toString
+    val out = tempDir("graft_tensors")
     val archives = Ingest.binaryFiles(spark, zipDir, "*.zip")
     Media.writeTensorBatches(Media.imageEtl(spark, archives).repartition(1), out, 1)
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
@@ -165,7 +175,7 @@ class MediaSpec extends SparkSuite {
   }
 
   test("roundTrip write-reload verification returns the persisted frame (§5.1)") {
-    val dir = Files.createTempDirectory("graft_rt").toString + "/rt"
+    val dir = tempDir("graft_rt") + "/rt"
     val df = spark.range(0, 100).toDF("n")
     val back = graft.operators.Audit.roundTrip(spark, df, dir)
     assert(back.count() === 100)
@@ -320,7 +330,7 @@ class MediaSpec extends SparkSuite {
   }
 
   test("deleteConsumed removes ingested archives (K5)") {
-    val dir = Files.createTempDirectory("graft_gc").toString
+    val dir = tempDir("graft_gc")
     val f = new java.io.File(s"$dir/done.zip")
     Files.write(f.toPath, Array[Byte](80, 75, 5, 6))
     assert(f.exists())

@@ -87,7 +87,7 @@ class PipelineSpec extends SparkSuite {
     val s3 = Dedup.dedupKeepFirst(s2, Seq("text"), Seq("doc_id"))
     assert(s3.select("doc_id").as[Long].collect().sorted === Array(1L, 3L, 6L))
     // stage 3: deterministic shard plan + physical JSONL export
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val dir = tempDir("graft_e2e")
     Batching.writeJsonlShards(s3, "doc_id", "text", nShards = 2, seed = 3L, dir)
     val back = spark.read.json(s"$dir/shard=*")
     assert(back.count() === 3L)

@@ -271,7 +271,7 @@ class PlanPostureSpec extends SparkSuite {
     val books = graft.operators.Relational.detach(
       graft.operators.Similarity.fitIvfPqCodebooks(
         emb, cents, m = 8, ksub = 16, iterations = 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_saltfit").toString
+    val dir = tempDir("graft_saltfit")
     graft.operators.Similarity.ivfPqEncode(emb, cents, books)
       .write.mode("overwrite").parquet(dir)
     val enc = spark.read.parquet(dir)
@@ -341,7 +341,7 @@ class PlanPostureSpec extends SparkSuite {
         plans.add(qe.executedPlan.toString)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_shardplan").toString
+    val out = tempDir("graft_shardplan")
     spark.listenerManager.register(listener)
     try {
       graft.operators.Batching.writeJsonlShards(
@@ -496,10 +496,11 @@ class PlanPostureSpec extends SparkSuite {
 
   test("streaming dedup ladder: text/media bytes never reach the stateful exchange") {
     // The streaming scrubs hash/band BEFORE the stateful shuffle — the
-    // exchange carries fixed-width rows (bucket, id, sig|hash), never the
-    // document text or media bytes. Pinned on the ANALYZED plan of the
-    // unstarted streaming frame: the TransformWithState input schema must
-    // not contain the raw payload column.
+    // exchange carries fixed-width rows (bucket, id, sig|hash|vector|codes),
+    // never the document text or media bytes, and the bucket only once.
+    // Pinned on the ANALYZED plan of the unstarted streaming frame: the
+    // TransformWithState input schema must not contain the raw payload
+    // column.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -507,26 +508,42 @@ class PlanPostureSpec extends SparkSuite {
     val fuzzy = graft.streaming.EventStreams.fuzzyDedupStream(docs, tau = 0.5)
     val items = MemoryStream[(Long, Long)].toDF().toDF("doc_id", "h")
     val ham = graft.streaming.EventStreams.hammingDedupStream(items)
+    def vectors = MemoryStream[(Long, Seq[Double])].toDF().toDF("vec_id", "embedding")
+    val v = Seq(1.0, 0.5, -0.25, 1.0)
+    val books = graft.operators.Similarity.fitPqCodebooks(
+      Seq((1L, v), (2L, v.map(-_))).toDF("vec_id", "embedding"),
+      m = 2, ksub = 2, iterations = 1)
+    val sem = graft.streaming.EventStreams.semanticDedupStream(vectors, 0.9)
+    val semPq = graft.streaming.EventStreams.semanticDedupStream(vectors, 0.9,
+      pqBooks = Some(books))
+    val banded = graft.streaming.EventStreams.semanticDedupStreamBanded(vectors, 0.9,
+      nPlanes = 4, bands = 2)
     for ((name, df, stringBudget) <- Seq(("fuzzyDedupStream", fuzzy, 1),
-        ("hammingDedupStream", ham, 0))) {
+        ("hammingDedupStream", ham, 0), ("semanticDedupStream", sem, 0),
+        ("semanticDedupStream(pqBooks)", semPq, 0),
+        ("semanticDedupStreamBanded", banded, 0))) {
       val analyzed = df.queryExecution.analyzed
       val tws = analyzed.collect {
         case p if p.nodeName.contains("TransformWithState") => p
       }
       assert(tws.nonEmpty, s"$name: no TransformWithState node:\n$analyzed")
       val child = tws.head.children.head
+      def cols = child.output.map(a => s"${a.name}:${a.dataType.simpleString}")
       // string budget through the stateful exchange: the fuzzy stream's
-      // band-bucket KEY is a string (budget 1); the hamming stream's key
-      // is a packed long (budget 0). Anything above budget means the raw
-      // document text — or a duplicate of the key — is riding the shuffle
-      // (this pin caught groupByKey's appended key column duplicating the
-      // in-tuple bucket before mapValues stripped it).
+      // band-bucket KEY is a string (budget 1); the other keys are packed
+      // longs (budget 0). Anything above budget means the raw document
+      // text — or a duplicate of the key — is riding the shuffle (this pin
+      // caught groupByKey's appended key column duplicating the in-tuple
+      // bucket before mapValues stripped it).
       val stringy = child.output.filter(
         _.dataType == org.apache.spark.sql.types.StringType)
       assert(stringy.size <= stringBudget,
         s"$name shuffles ${stringy.size} string column(s) into state " +
-          s"(budget $stringBudget): " +
-          s"${child.output.map(a => s"${a.name}:${a.dataType.simpleString}")}")
+          s"(budget $stringBudget): $cols")
+      // exactly (id, payload) plus the appended key: a bucket carried on
+      // the value side too would be a fourth column
+      assert(child.output.size === 3,
+        s"$name: stateful input must be (id, payload, appended key), got $cols")
     }
   }
 

@@ -77,7 +77,7 @@ class SoundSpec extends SparkSuite {
     assert(stereo.nChannels === 2)
     assert(stereo.mono.forall(v => math.abs(v) < 2e-4))
     // audit stats land on theory: RMS = a/sqrt(2), ZCR = 2f per second
-    val dir = Files.createTempDirectory("graft_wav").toString
+    val dir = tempDir("graft_wav")
     Files.write(java.nio.file.Paths.get(s"$dir/tone.wav"), wav16(rate, Array(sine)))
     val audit = Sound.audioAudit(
       graft.sources.Ingest.binaryFiles(spark, dir, "*.wav")).head()
@@ -138,7 +138,7 @@ class SoundSpec extends SparkSuite {
     val good = wav16(8000, Array(Array.fill(100)(0.1)))
     assert(Sound.decodeWavPcm(good.take(60)).isEmpty)
     // and the audit stream drops only the undecodable rows
-    val dir = Files.createTempDirectory("graft_wav_mixed").toString
+    val dir = tempDir("graft_wav_mixed")
     Files.write(java.nio.file.Paths.get(s"$dir/ok.wav"), good)
     Files.write(java.nio.file.Paths.get(s"$dir/junk.wav"), "junk".getBytes)
     val out = Sound.audioAudit(
